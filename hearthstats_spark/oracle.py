@@ -1,12 +1,13 @@
 """DuckDB-oracle comparison harness (SURVEY.md §5.2 t2).
 
-Replicates the driver's check locally: run the Spark query and the
-DuckDB oracle SQL on the same parquet tables, compare row-count +
-column names + order-insensitive values. Used by tests and by
-``scripts/check_oracle.py`` during development.
+Runs the Spark query and the DuckDB oracle SQL on the same parquet
+tables and compares row-count + column names + order-insensitive
+values. :func:`check_op` is the one per-op check-and-release step:
+``tests/test_oracle_sweep.py`` (every op at sf0.001, Tier-1) and
+``scripts/check_oracle.py`` (any scale factor) both run it.
 
-The value compare is *bit-exact* on purpose: the driver hashes
-values, so "close" floats are failures. The §1.3 discipline (decimal
+The value compare is *bit-exact* on purpose: the contract is a
+value hash, so "close" floats are failures. The §1.3 discipline (decimal
 sums, ROUND on both sides, minute-truncated timestamp strings)
 is what makes bit-exactness achievable.
 """
@@ -72,10 +73,12 @@ class CompareResult:
     name: str
     ok: bool
     n_spark: int
-    n_duck: int
+    n_duck: int | None  # None: rows-only op, nothing to compare
     issues: list[str] = field(default_factory=list)
 
     def __str__(self) -> str:
+        if self.n_duck is None:
+            return f"[rows] {self.name}: {self.n_spark} rows"
         s = "OK " if self.ok else "FAIL"
         msg = f"[{s}] {self.name}: spark={self.n_spark} duck={self.n_duck}"
         for i in self.issues[:8]:
@@ -109,3 +112,24 @@ def check_query(spark, con, sf_dir: str, name: str, fn, oracle: str) -> CompareR
     spark_pdf = fn(spark, sf_dir).toPandas()
     duck_pdf = con.execute(oracle).fetchdf()
     return compare(name, spark_pdf, duck_pdf)
+
+
+def check_op(spark, con, sf_dir: str, q) -> CompareResult:
+    """Check one registered op (a ``registry.Query``): compare it
+    against its oracle, or count the rows of a rows-only op. Either
+    way, release what the op left cached before returning.
+
+    The queries leave guard-applied broadcast frames and their own
+    ``.cache()``s (q92's dl/tf, q94's cnt, the KS vals frame, the
+    dedup shingle frames) to their caller; this is that boundary, so
+    a 200-op sweep does not accumulate one cached frame per op."""
+    from hearthstats_spark.operators.bounded import release_guard_caches
+
+    try:
+        if q.oracle is None:
+            return CompareResult(q.name, True, q.fn(spark, sf_dir).count(),
+                                 None)
+        return check_query(spark, con, sf_dir, q.name, q.fn, q.oracle)
+    finally:
+        release_guard_caches()
+        spark.catalog.clearCache()

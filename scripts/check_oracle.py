@@ -38,7 +38,7 @@ import time
 
 sys.path.insert(0, ".")
 
-from hearthstats_spark.oracle import check_query, duck_connect  # noqa: E402
+from hearthstats_spark.oracle import check_op, duck_connect  # noqa: E402
 from hearthstats_spark.queries.registry import REGISTRY  # noqa: E402
 from hearthstats_spark.session import get_spark  # noqa: E402
 
@@ -69,16 +69,8 @@ def main() -> int:
         if only and not any(name.startswith(o) for o in only):
             continue
         t0 = time.time()
-        if q.oracle is None:
-            try:
-                n = q.fn(spark, args.sf).count()
-                print(f"[rows] {name}: {n} rows ({time.time()-t0:.1f}s)")
-            except Exception as e:
-                n_fail += 1
-                print(f"[FAIL] {name}: {type(e).__name__}: {e}")
-            continue
         try:
-            res = check_query(spark, con, args.sf, name, q.fn, q.oracle)
+            res = check_op(spark, con, args.sf, q)
         except Exception as e:
             n_fail += 1
             print(f"[FAIL] {name}: {type(e).__name__}: {str(e)[:500]}")
@@ -86,18 +78,6 @@ def main() -> int:
         print(f"{res} ({time.time()-t0:.1f}s)")
         if not res.ok:
             n_fail += 1
-        # sweep boundary: release the guard-applied cached frames
-        # (ADVICE r7) so a 200-query sweep doesn't accumulate one
-        # small cached frame per applied broadcast_bounded site —
-        # plus every query-level .cache() (q92's dl/tf, q94's cnt,
-        # the KS vals frame, the dedup shingle frames): the queries
-        # deliberately leave them to their harness boundary (ADVICE
-        # r11 item 3), and this is that boundary, same as
-        # bench._drop_blocks
-        from hearthstats_spark.operators.bounded import (
-            release_guard_caches)
-        release_guard_caches()
-        spark.catalog.clearCache()
     print(f"\n{'ALL GREEN' if n_fail == 0 else f'{n_fail} FAILURES'}")
     return 1 if n_fail else 0
 
