@@ -1,9 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry contract for the PySpark engine.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke query; ``queries()[name]`` runs a
+registered op and ``oracle_sql()[name]`` is its DuckDB equivalent,
+compared by row count + schema + order-insensitive value hash.
+Both return the registry in declared (``load_all()``) order;
+``tests/test_oracle_sweep.py`` checks every oracle on each Tier-1
+run.
 
 Implementation lives in ``hearthstats_spark``; this module just
 re-exports the declared-query registry (SURVEY.md §2).
@@ -31,262 +33,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return reg["q15_agg_pricing"].fn(spark, "/root/testdata/sf0.001")
 
 
-def _driver_covered() -> set[str]:
-    """Union of query ids across every checked-in CORRECTNESS_r*.json.
-
-    The driver caps each round's CORRECTNESS file at 50 entries taken
-    from the head of ``queries()``; these files are the only durable
-    record of which ids have ever had driver eyes. Round 1 covered
-    q01–q50 and round 2 covered q68–q117, so coverage must be tracked
-    across rounds, not guessed from id ranges (round 2's newest-first
-    heuristic left q51–q67 unverified twice)."""
-    import glob
-    import json
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    covered: set[str] = set()
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                covered.update(json.load(fh).keys())
-        except Exception:
-            continue  # a malformed file must not break the contract
-    return covered
-
-
-def _verified_map() -> dict:
-    """VERIFIED.json: id -> {round, file, sha256-of-file-at-check-time}
-    (rebuilt by scripts/update_verified.py each round-start)."""
-    import json
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "VERIFIED.json")) as fh:
-            return json.load(fh)
-    except Exception:
-        return {}
-
-
-def _current_file_hashes(relpaths) -> dict[str, str | None]:
-    import hashlib
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    out: dict[str, str | None] = {}
-    for rel in set(relpaths):
-        if not rel:
-            continue
-        try:
-            with open(os.path.join(here, rel), "rb") as fh:
-                out[rel] = hashlib.sha256(fh.read()).hexdigest()
-        except OSError:
-            out[rel] = None
-    return out
-
-
-#: Ids whose SEMANTICS were deliberately changed in the current
-#: round (new behavior that needs independent driver eyes first) —
-#: the builder declares them each round alongside the edits; stale
-#: ids NOT named here are co-located hash-stale only (their file
-#: changed but their declared behavior did not, verified by the
-#: local full-sweep oracle runs, which perform the same comparison
-#: the driver does). A declared id whose file hash still matches its
-#: VERIFIED.json record is unaffected (it stays in the fresh class),
-#: so a stale declaration from a previous round is inert.
-#:
-#: Round 9 (freshness-convergence round — deliberately small so the
-#: 50-slot window burns down the ~137 co-located-stale backlog):
-#: q13/q109 via the SHARED operators/asof.py plan change (ADVICE r8:
-#: NULL-keyed probe rows now route AROUND the window instead of
-#: piling into the single NULL partition — hash-identical, locally
-#: re-verified, but the per-file staleness cannot see an operator
-#: edit so both users are declared explicitly, the numeric.py /
-#: round-8 precedent, with docstring notes marking their files
-#: stale). The round-8 declarations are retired: every r8-declared
-#: id got its driver record in CORRECTNESS_r08 and its file hash now
-#: matches VERIFIED.json, so they would be inert here anyway.
-#: Also round 9: the q117-style pre-aggregate-before-join plan
-#: rewrites (VERDICT r8 item 3) — q123 (lineitem→per-order decimal
-#: partials before the orders join), q113 (orders→per-customer
-#: partials before the customer join), q103 (events→per-(user,week)
-#: max-ts before the first-signup join, which also deletes the
-#: post-join DISTINCT's second full-fact shuffle). All hash-exact at
-#: sf0.01 AND sf0.1; at sf0.01's broadcast regime each costs one
-#: extra map-side-combined Exchange (PLANS.md regenerated, gate
-#: diff eyeballed), at the 100 TB SMJ regime each strictly reduces
-#: the rows crossing the wire.
-#: Round 10 (VERDICT r9 item 5): the six sketch ids upgraded from
-#: rows-only to oracle-checked exact-twin + in-plan-bound form —
-#: q49 (full exact brute-force twin: surviving pairs are exact, so
-#: recall itself is hashed), q84/q151 (exact distinct twin + HLL
-#: error-band boolean), q139 (DuckDB recomputes the IDENTICAL
-#: deterministic CMS — full estimate parity), q140 (exact
-#: quantile_cont twin + GK rank-error booleans), q177 (q176's exact
-#: kernel as twin + integer sandwich verdicts). Each is a semantic
-#: edit to its output contract, so each must get driver eyes before
-#: any previously-checked id re-rotates. The round-9 declarations
-#: are retired: all eight got CORRECTNESS_r09 records and their file
-#: hashes match VERIFIED.json again.
-#: Also round 10: q98 — operators/graph.triangle_census's closing
-#: join now packs (xy.dst, xz.dst) into one BIGINT and probes a
-#: pk-projected edge set (measured −15% census wall at 2.96B wedges,
-#: counts identical at 1×/10×/20×). A shared-OPERATOR edit the
-#: per-file staleness cannot see, so the consuming id is declared
-#: explicitly (the operators/asof.py round-9 precedent).
-#: Round 11 (VERDICT r10 item 2): q22 — the last rows-only q-op —
-#: upgraded to the exact-twin + in-plan-bound form (exact
-#: count_distinct twin + 5% ≈ 3σ band boolean at rsd=0.016, the q84
-#: treatment), landed this round because aggregates.py was naturally
-#: stale (4 ids already in the backlog; window_plan verdict SAFE).
-#: All 200 q-ops are now oracle-checked. The round-10 declarations
-#: are retired: all seven got CORRECTNESS_r10 records (50/50 green)
-#: and their file hashes match VERIFIED.json again.
-REVERIFY_FIRST: set[str] = {
-    "q22_agg_approx",
-}
-
-
-def _contract_order(names) -> list[str]:
-    """The driver's per-round CORRECTNESS file holds exactly 50
-    entries from the head of this ordering, so ordering IS coverage
-    policy (full class semantics on :func:`_ordering`, which this
-    wraps). Classes, each q-ops (oracle-checked) before s-ops
-    (rows-only), oldest id first inside a class:
-
-    1. never covered q-ops — ids absent from every CORRECTNESS_r*.json;
-    2. declared-edited stale q-ops — the defining source file's hash
-       no longer matches the hash recorded at check time
-       (VERIFIED.json) AND the id is in :data:`REVERIFY_FIRST`: its
-       semantics changed this round, so the new behavior must get
-       driver eyes before anything else that has ever been checked;
-    3. never covered s-ops — a first rows-only driver record beats
-       re-rotating any previously-checked id: after round 7 the
-       one-shot sinks were the ONLY components with zero driver-side
-       evidence in seven rounds (VERDICT r7 item 4), while a
-       co-located hash-stale id's only new risk — an accidental
-       neighbor break — is exactly what the local full-sweep oracle
-       run already re-checks with the driver's own comparison;
-    4. co-located stale q-ops — hash-stale, last checked before the
-       most recent round, NOT declared: behavior asserted unchanged
-       and locally re-verified; they re-enter the window ahead of
-       everything green and rotate through over subsequent rounds.
-       (Window arithmetic that forced the 2/3/4 split: round 8's
-       verdict queue demanded ~78 slots — 71 stale ids across eight
-       files + 7 first-ever sink records — in a 50-slot window; the
-       old stale-before-sinks total order would have starved the
-       sinks an eighth straight round AND left some of the
-       semantically-edited ids themselves outside the window.);
-    5. just-lapsed q-ops — checked in the MOST RECENT round and edited
-       since: the lowest-risk re-check class (driver-verified last
-       round, locally re-verified after the edit);
-    6. the green rotation — fresh q-ops AND covered s-ops in ONE
-       tier, oldest check round first (q before s within a round).
-       Covered s-ops used to rank strictly after every fresh q-op,
-       which could never fire: ~200 fresh q-ops always refill the
-       50-slot window, so an s-op's rows-record would have stayed
-       frozen at its r7/r8 round forever — a silently-broken sink
-       would keep a stale green record indefinitely (VERDICT r10
-       item 3). Merging the tiers lets the window reach the s-ops
-       as soon as the stale backlog drains (~r12), while their
-       older check rounds naturally rank them ahead of recently
-       re-verified q-ops.
-
-    Every query is still present either way, and
-    scripts/check_oracle.py runs the full sweep locally regardless
-    (README §Correctness).
-
-    Numeric parse, not string compare: lexicographically
-    "q102" < "q51", which would silently file new queries under the
-    already-covered head.
-
-    Never-covered-s internal order is NOT numeric (VERDICT r6 item
-    4): the ops a 100 TB deployment actually runs come first —
-    s23–s27 (streaming index maintenance: incremental dedup / ANN
-    serving / compaction / retention / vocab), then the
-    stateful-streaming lanes newest-first, then the reader-shaped
-    sink ops, then plain one-shot sinks (s01/s02-style) last."""
-    return _ordering(names)[0]
-
-
-def _ordering(names, hash_overrides=None):
-    """The full ordering computation behind :func:`_contract_order`:
-    returns ``(ordered names, name -> class int)`` using the 0-based
-    class values (0 never-covered q, 1 declared-edited stale q,
-    2 never-covered s, 3 co-located stale q, 4 just-lapsed q,
-    5 fresh q, 6 covered s).
-
-    ``hash_overrides`` maps repo-relative file paths to a hash value
-    to use INSTEAD of the file's current content hash — the hook
-    `scripts/window_plan.py` uses to simulate "what if I edit FILE"
-    against the REAL policy (a hand-copied reimplementation there
-    went stale the moment this function changed — round-7 review)."""
-    _SOP_PRIORITY = [
-        # streaming index maintenance — the ops a production ingest runs
-        "s23", "s24", "s25", "s26", "s27",
-        # stateful / streaming lanes, newest (least-exercised) first
-        "s22", "s19", "s17", "s16", "s14", "s13", "s11",
-        "s07", "s06", "s05", "s04", "s03",
-        # reader-shaped source/layout ops
-        "s21", "s20", "s18",
-        # one-shot sinks — cheapest, oldest, most suite-covered
-        "s15", "s12", "s10", "s09", "s08", "s02", "s01",
-    ]
-    _SOP_RANK = {p: i for i, p in enumerate(_SOP_PRIORITY)}
-
-    def qnum(n: str) -> int:
-        return int(n[1:n.index("_")])
-
-    covered = _driver_covered()
-    verified = _verified_map()
-    cur = _current_file_hashes(v.get("file") for v in verified.values())
-    if hash_overrides:
-        cur.update(hash_overrides)
-
-    latest_round = max(
-        (v.get("round", 0) for v in verified.values()), default=0)
-
-    def klass(n: str) -> int:
-        if not n.startswith("q"):
-            return 2 if n not in covered else 6
-        if n not in covered:
-            return 0
-        v = verified.get(n)
-        if not v or not v.get("sha256") or cur.get(v.get("file")) != v["sha256"]:
-            # covered but source changed (or unverifiable) since:
-            # a declared semantic edit re-verifies before anything
-            # else checked before; edits to ids checked in the most
-            # recent round are just-lapsed (4); the rest are
-            # co-located stale (3), behind first-ever s records
-            if n in REVERIFY_FIRST:
-                return 1
-            if v and v.get("round", 0) >= latest_round:
-                return 4
-            return 3
-        return 5
-
-    def key(n: str):
-        rnd = verified.get(n, {}).get("round", 0)
-        # classes 5 (fresh q) and 6 (covered s) sort as ONE green
-        # rotation tier, oldest driver record first, q before s
-        # within a round — a strictly-after class 6 never re-enters
-        # the 50-slot window once ~200 q-ops are green (VERDICT r10
-        # item 3); the class labels stay distinct for reporting
-        k = klass(n)
-        tier = 5 if k == 6 else k
-        if n.startswith("q"):
-            return (tier, rnd, 0, qnum(n), n)
-        return (tier, rnd, 1,
-                _SOP_RANK.get(n.split("_")[0], len(_SOP_PRIORITY)), n)
-
-    out = sorted(names, key=key)
-    return out, {n: klass(n) for n in out}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
     from hearthstats_spark.queries.registry import load_all
 
-    reg = load_all()
-    return {name: reg[name].fn for name in _contract_order(reg)}
+    return {name: q.fn for name, q in load_all().items()}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -294,9 +45,5 @@ def oracle_sql() -> dict[str, str]:
     ops (streaming, sketches, side-effect sinks) are omitted."""
     from hearthstats_spark.queries.registry import load_all
 
-    reg = load_all()
-    return {
-        name: reg[name].oracle
-        for name in _contract_order(reg)
-        if reg[name].oracle is not None
-    }
+    return {name: q.oracle for name, q in load_all().items()
+            if q.oracle is not None}

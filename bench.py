@@ -1,116 +1,16 @@
-#!/usr/bin/env python
-"""Per-round benchmark (driver contract).
+"""Host helpers the benchmark (``perfbench/``) imports.
 
-Runs every registered batch query from SURVEY.md §2 at
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE SHORT JSON line:
-
-    {"metric": "headline6_total_latency", "value": N,
-     "headline6_warm": W, "unit": "sec", "sf": 0.1,
-     "n_queries": 75, "total_all_queries": T,
-     "steal_max": S, "steal_sus": U}
-
-``steal_max``/``steal_sus`` summarize the 16M-numpy CPU-steal probes
-taken before, between and after the two long phases (see
-:func:`steal_probe`; worst per-probe values, so a mid-run burst
-cannot average away): ``steal_sus``
-(sustained median, excl. idle→busy first runs) ≫0.2 s
-means a hypervisor-degraded window whose absolute timings overstate
-regressions — re-measure or compare ratios (round-8/11 precedent);
-a high ``steal_max`` with a quiet ``steal_sus`` is only the
-idle→busy transition penalty and the continuously-busy query
-timings are mostly trustworthy.
-
-The final stdout line is deliberately compact (~220 bytes as of
-round 11 — the real budget is that the line must sit INTACT inside
-the driver's 2000-char stdout tail capture): round 1 lost its bench
-gate because a ~4 KB line with the 75-entry per-query map inline was
-truncated mid-object (BENCH_r01.json "parsed": null). The full per-query
-breakdown now goes to ``BENCH_DETAIL.json`` next to this file and is
-echoed on stderr.
-
-Each query is materialized through the ``noop`` write format so the
-full plan executes (count() alone would let Catalyst prune every
-column of a projection query); timing excludes JVM startup (one
-warm-up action runs first) but includes planning + execution. Every
-query is timed twice — cold (first execution; the headline metric,
-comparable across rounds) and warm (immediate re-run with codegen
-JIT'ed and footers cached; the steady-state a long-lived cluster
-sees) — both recorded per query in BENCH_DETAIL.json.
-
-Side-effect/streaming smoke ops (s01–s12) are excluded: they time
-file-system round-trips, not query execution.
-
-A second phase re-times the 10 most expensive queries in ONE fresh
-JVM (warmup + median-of-3 → ``steady_top`` in BENCH_DETAIL.json):
-in-bench cold numbers for late-alphabet heavyweights carry ~2× JVM
-history noise (code cache, GC state after 170 prior queries), so
-cross-round perf comparisons should read ``steady_top`` first.
-Set ``SPARK_GRAFT_SKIP_STEADY=1`` to skip (fast local iteration).
+``steal_probe`` times a fixed numpy workload; ``perfbench/run.py``
+records it before and after each run as its CPU-steal context line.
+``_drop_blocks`` frees cached and checkpointed blocks between
+passes (``perfbench/client.py``). Run the benchmark with
+``python3 perfbench/run.py --workload olap_mix --seed 1 --seconds 14
+--trace 0``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import sys
 import time
-
-
-def _list_artifacts() -> list[str]:
-    """Persisted-artifact dirs currently in the content-keyed store —
-    recorded at bench start AND end (BENCH_DETAIL provenance): cold
-    numbers for persisted-index adopters differ between a first-touch
-    train and a warm read-back."""
-    from hearthstats_spark.operators.ann_index import (
-        _cache_root, cache_enabled,
-    )
-    try:
-        if cache_enabled() and os.path.isdir(_cache_root()):
-            return sorted(os.listdir(_cache_root()))
-    except OSError:
-        pass
-    return []
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = (  # BASELINE.md anchor queries, reported individually
-    "q06_join_multiway", "q15_agg_pricing", "q25_win_topk",
-    "q41_win_tumbling", "q50_sim_topk", "q52_text_tokens",
-)
-
-#: Host-canary anchors (VERDICT r8 item 6): WARM sf0.1 times of two
-#: queries untouched since round 1/4 (q34 pure projection scan, q25
-#: window top-k) as measured on the round-7 reference host — the
-#: host every BASELINE.md comparison was made on. canary_factor =
-#: median(current_warm / anchor); a uniform shift on these untouched
-#: scans is VM speed, not a regression, so cross-round comparisons
-#: divide by it instead of relying on round-notes archaeology
-#: (round 8 measured 1.29-1.40x on a CPU-stealing VM, verified by a
-#: 16M-element numpy probe — ROUND8_NOTES work-log 20/23).
-CANARY_ANCHORS = {"q34_str_funcs": 0.138, "q25_win_topk": 0.330}
-
-
-def canary_factor(warm: dict, sf: float = 0.1) -> float | None:
-    """median(current warm / reference-host anchor) over the canary
-    queries; None when neither canary produced a warm timing (a
-    failed run must not crash the bench report) or when the bench
-    ran at any SF other than 0.1 — the anchors are sf0.1 warm
-    medians, so at another scale the ratio would measure data
-    volume, not host speed (code-review find, round 9)."""
-    import statistics
-
-    if sf != 0.1:
-        return None
-    ratios = [warm[k] / v for k, v in CANARY_ANCHORS.items()
-              if warm.get(k, -1) is not None and warm.get(k, -1) > 0]
-    return round(statistics.median(ratios), 3) if ratios else None
-
-
-#: Quiet-host reference for :func:`steal_probe` (measured on the same
-#: hosts the anchors come from: 0.14-0.2 s; ROUND8_NOTES work-log
-#: 20/22 measured the degraded regime at 4-24 s on identical work).
-STEAL_PROBE_QUIET_S = 0.2
 
 
 def steal_probe(n_runs: int = 3) -> list[float]:
@@ -144,20 +44,6 @@ def steal_probe(n_runs: int = 3) -> list[float]:
         float((a * 2.0).sum())
         out.append(round(time.perf_counter() - t0, 3))
     return out
-
-
-def steal_sustained(*probe_runs: list[float]) -> float:
-    """Median of the non-first runs across probe triplets — the
-    sustained-throughput health number gates should use (see
-    :func:`steal_probe`: run 0 measures the idle→busy transition,
-    not steady work). Falls back to the overall median when every
-    triplet has length 1."""
-    import statistics
-
-    tail = [r for runs in probe_runs for r in runs[1:]]
-    if not tail:
-        tail = [r for runs in probe_runs for r in runs]
-    return round(statistics.median(tail), 3) if tail else -1.0
 
 
 def _drop_blocks(spark) -> None:
@@ -195,189 +81,3 @@ def _drop_blocks(spark) -> None:
     gc.collect()  # release Python-side plan refs -> JVM weak refs
     spark.sparkContext._jvm.System.gc()  # ContextCleaner runs now
     _time.sleep(0.3)  # async deletions settle outside the next timing
-
-
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    try:
-        sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf"))
-    except ValueError:
-        sf = -1.0
-
-    from hearthstats_spark.queries.registry import load_all
-    from hearthstats_spark.session import get_spark
-
-    arts_at_start = _list_artifacts()
-    probe_start = steal_probe()
-
-    spark = get_spark("hearthstats-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    registry = load_all()
-
-    # Warm up shared infrastructure outside the timed region — the
-    # things a long-lived cluster has warm and a fresh local JVM does
-    # not: JIT/whole-stage-codegen baseline, the parquet reader path,
-    # broadcast-exchange machinery, and the Arrow Python worker pool
-    # (local[N] forks its daemon workers on first use). Per-query
-    # timings then measure the QUERY, not one-time session init.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    from pyspark.sql import functions as _F
-    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
-    region = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-    nation.join(_F.broadcast(region),
-                nation.n_regionkey == region.r_regionkey).count()
-    (spark.range(100_000, numPartitions=int(os.environ.get(
-        "SPARK_GRAFT_CPUS", "32")))
-     .mapInPandas(lambda it: it, "id long").selectExpr("sum(id)").collect())
-
-    timings: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    for name, q in sorted(registry.items()):
-        if not name.startswith("q"):
-            continue  # side-effect/streaming smoke ops (s01..) time IO, not queries
-        t0 = time.perf_counter()
-        try:
-            df = q.fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-        except Exception as e:  # a failed query must not hide the rest
-            print(f"[bench] FAIL {name}: {type(e).__name__}: {e}",
-                  file=sys.stderr)
-            timings[name] = -1.0
-        # drop caches a query left behind (dedup kernels cache their
-        # shingle frames): with 100+ queries in one session the
-        # accumulated blocks cause GC-pressure variance in LATER
-        # queries — each timing should be cold and independent
-        _drop_blocks(spark)
-        # warm steady-state: the same query again with its codegen
-        # classes JIT'ed and file footers in page cache — the number
-        # a long-lived cluster sees. Headline metric stays COLD for
-        # cross-round comparability; warm goes to BENCH_DETAIL only.
-        if timings[name] >= 0:
-            t0 = time.perf_counter()
-            try:
-                df = q.fn(spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                warm[name] = round(time.perf_counter() - t0, 3)
-            except Exception:
-                warm[name] = -1.0
-            _drop_blocks(spark)
-
-    # host-health sample between the query loop and the steady phase:
-    # steal windows last minutes, so endpoints-only sampling could
-    # miss a burst confined to either long phase (round-11 review)
-    probe_mid = steal_probe()
-
-    ok = {k: v for k, v in timings.items() if v >= 0}
-    # the headline set is FIXED (BASELINE.md anchors) so `value` stays
-    # comparable across rounds as query coverage grows
-    headline_total = round(sum(timings[k] for k in HEADLINE
-                               if timings.get(k, -1) >= 0), 3)
-
-    # Phase 2 — reproducible heavyweight timings (VERDICT r4 item 4):
-    # the 10 most expensive queries re-timed in ONE fresh JVM
-    # (warmup + median-of-3), after this session's JVM is torn down,
-    # so BENCH_DETAIL carries a steady number free of the
-    # 170-queries-of-history interference that made in-bench colds
-    # for late-alphabet heavyweights ~2x their isolated times.
-    # Round-over-round perf diffs should read `steady_top` first and
-    # treat cold as the cross-round trend line only.
-    #
-    # VERDICT r5 item 6: beyond the fixed top-10, every query whose
-    # in-bench cold exceeds 2x its own warm (and isn't trivially
-    # fast) also gets a steady timing — exactly the population whose
-    # cold number is JVM-history noise rather than work.
-    steady: dict[str, float] = {}
-    top = sorted(ok, key=lambda k: ok[k], reverse=True)[:10]
-    noisy = [k for k in ok
-             if k not in top and ok[k] >= 0.5
-             and warm.get(k, -1) > 0 and ok[k] / warm[k] > 2.0]
-    # worst ratios first; cap keeps the fresh-JVM phase bounded
-    top = top + sorted(noisy, key=lambda k: ok[k] / warm[k],
-                       reverse=True)[:20]
-    if top and not os.environ.get("SPARK_GRAFT_SKIP_STEADY"):
-        spark.stop()  # free the 128 GiB JVM before forking another
-        import subprocess
-        cmd = [sys.executable,
-               os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "scripts", "steady_bench.py"),
-               *top, "--sf", sf_dir]
-        try:
-            res = subprocess.run(cmd, capture_output=True, text=True,
-                                 timeout=1800)
-            sys.stderr.write(res.stderr[-4000:])
-            # distinguish "steady subprocess died" (OOM, crash —
-            # returncode/empty stdout) from a parse issue (ADVICE r5)
-            if res.returncode != 0 or not res.stdout.strip():
-                print(f"[bench] steady phase crashed: returncode="
-                      f"{res.returncode}, stdout_bytes="
-                      f"{len(res.stdout)}", file=sys.stderr)
-            else:
-                steady = json.loads(res.stdout.strip().splitlines()[-1])
-        except Exception as e:  # steady phase is additive, never fatal
-            print(f"[bench] steady phase failed: {type(e).__name__}: {e}",
-                  file=sys.stderr)
-    canary = canary_factor(warm, sf)
-    probe_end = steal_probe()
-    steal_max = max(probe_start + probe_mid + probe_end)
-    # worst per-probe sustained median: a degraded mid-run window
-    # must not average away against quiet neighbors
-    steal_sus = max(steal_sustained(probe_start),
-                    steal_sustained(probe_mid),
-                    steal_sustained(probe_end))
-
-    # warm headline beside the cold one (VERDICT r10 item 6): cold
-    # carries the documented ±25% fresh-JVM variance that dominates
-    # round-over-round noise discussion; warm is the steady number a
-    # long-lived cluster sees, so the parsed line now carries both
-    # and cross-round comparisons should normalize on warm first
-    headline_warm = round(sum(warm[k] for k in HEADLINE
-                              if warm.get(k, -1) >= 0), 3)
-
-    detail = {
-        "metric": "headline6_total_latency",
-        "value": headline_total,
-        "headline6_warm": headline_warm,
-        "unit": "sec",
-        "sf": sf,
-        "canary_factor": canary,
-        "canary_anchors": CANARY_ANCHORS,
-        "steal_probe": {"start": probe_start, "mid": probe_mid,
-                        "end": probe_end, "sustained": steal_sus,
-                        "quiet_ref_s": STEAL_PROBE_QUIET_S},
-        "ann_cache_at_start": arts_at_start,
-        "ann_cache_at_end": _list_artifacts(),
-        "headline": {k: timings.get(k) for k in HEADLINE},
-        "queries": {k: {"cold": v, "warm": warm.get(k)}
-                    for k, v in timings.items()},
-        "steady_top": steady,
-        "total_all_queries": round(sum(ok.values()), 3),
-        "total_all_queries_warm": round(
-            sum(v for v in warm.values() if v >= 0), 3),
-        "n_queries": len(ok),
-    }
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
-    print(json.dumps(detail), file=sys.stderr)
-    # final stdout line: compact on purpose — the driver tail-captures
-    # stdout and truncated round 1's 4 KB line (per-query map now in
-    # BENCH_DETAIL.json / stderr instead)
-    print(json.dumps({
-        "metric": "headline6_total_latency",
-        "value": headline_total,
-        "headline6_warm": headline_warm,
-        "unit": "sec",
-        "sf": sf,
-        "n_queries": len(ok),
-        "total_all_queries": round(sum(ok.values()), 3),
-        "canary_factor": canary,
-        "steal_max": steal_max,
-        "steal_sus": steal_sus,
-    }))
-    return 0 if len(ok) == len(timings) else 1
-
-
-if __name__ == "__main__":
-    sys.exit(main())

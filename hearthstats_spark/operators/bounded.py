@@ -54,7 +54,7 @@ GUARDED_SITES: list[tuple[int, bool]] = []
 #: (ADVICE r7): each is ≤ its site's max_rows so residency is
 #: bounded, but a full sweep would otherwise accumulate one small
 #: cached frame per applied site until LRU eviction. Sweep drivers
-#: (bench.py / scripts/check_oracle.py) release them between
+#: (``oracle.check_op``, ``bench._drop_blocks``) release them between
 #: queries via :func:`release_guard_caches`.
 _APPLIED_CACHES: list[DataFrame] = []
 

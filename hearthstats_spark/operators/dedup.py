@@ -283,12 +283,11 @@ def prefix_filtered_jaccard_pairs_indexed(
     MEASURED AND REJECTED at sf0.1 in round 8 (ROUND8_NOTES: parquet
     array<long> deserialization of the corpus-sized set frame costs
     more than recomputing xxhash64 shingles inside whole-stage
-    codegen); kept as a callable lane for the round-9 larger-scale
-    re-measure (scripts/exp_shingle_index.py) and for cluster
-    deployments where the doc-frequency shuffle dominates. Output is
-    bit-identical to the in-plan kernel by construction: the builders
-    below ARE the kernel's first half, and the back half is shared
-    code (_jaccard_candidates_verify)."""
+    codegen); kept as a callable lane for a larger-scale re-measure
+    and for cluster deployments where the doc-frequency shuffle
+    dominates. Output is bit-identical to the in-plan kernel by
+    construction: the builders below ARE the kernel's first half,
+    and the back half is shared code (_jaccard_candidates_verify)."""
     from hearthstats_spark.io import load_table
     from hearthstats_spark.operators.ann_index import cache_enabled, persisted
 

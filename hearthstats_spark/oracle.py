@@ -7,9 +7,9 @@ values. :func:`check_op` is the one per-op check-and-release step:
 ``scripts/check_oracle.py`` (any scale factor) both run it.
 
 The value compare is *bit-exact* on purpose: the contract is a
-value hash, so "close" floats are failures. The §1.3 discipline (decimal
-sums, ROUND on both sides, minute-truncated timestamp strings)
-is what makes bit-exactness achievable.
+value hash, so "close" floats are failures. The §1.3 discipline
+(decimal sums, ROUND on both sides, minute-truncated timestamp
+strings) is what makes bit-exactness achievable.
 """
 
 from __future__ import annotations
@@ -108,12 +108,6 @@ def compare(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> Compa
     return CompareResult(name, not issues, len(spark_pdf), len(duck_pdf), issues)
 
 
-def check_query(spark, con, sf_dir: str, name: str, fn, oracle: str) -> CompareResult:
-    spark_pdf = fn(spark, sf_dir).toPandas()
-    duck_pdf = con.execute(oracle).fetchdf()
-    return compare(name, spark_pdf, duck_pdf)
-
-
 def check_op(spark, con, sf_dir: str, q) -> CompareResult:
     """Check one registered op (a ``registry.Query``): compare it
     against its oracle, or count the rows of a rows-only op. Either
@@ -129,7 +123,8 @@ def check_op(spark, con, sf_dir: str, q) -> CompareResult:
         if q.oracle is None:
             return CompareResult(q.name, True, q.fn(spark, sf_dir).count(),
                                  None)
-        return check_query(spark, con, sf_dir, q.name, q.fn, q.oracle)
+        return compare(q.name, q.fn(spark, sf_dir).toPandas(),
+                       con.execute(q.oracle).fetchdf())
     finally:
         release_guard_caches()
         spark.catalog.clearCache()

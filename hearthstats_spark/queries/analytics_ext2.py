@@ -648,7 +648,7 @@ def q109_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round 9 (ADVICE r8): the shared operator now routes NULL-keyed
     probe rows around the window — hash-identical, skew-safe on
-    dirty FKs; declared in REVERIFY_FIRST like q13."""
+    dirty FKs."""
     from hearthstats_spark.operators.asof import asof_join
 
     ev = load_table(spark, sf_dir, "events")

@@ -1137,7 +1137,7 @@ def _ks_grouped_vals(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-value-sized (primitive columns), so residency is the
     same order as the shuffle the kernel already pays; the bench /
     oracle harnesses drop caches at every query boundary
-    (bench._drop_blocks / check_oracle)."""
+    (bench._drop_blocks / oracle.check_op)."""
     o = load_table(spark, sf_dir, "orders")
     s = o.where(
         # declared NULL policy: a NULL value is not a sample point

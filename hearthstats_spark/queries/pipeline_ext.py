@@ -448,8 +448,10 @@ def q94_item_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r11 plan dump — the same failure q108's degree frame hit), so
     # ca and cb each re-aggregated ui. checkpoint_preserving is the
     # immune form: the item-grain agg runs ONCE and keeps its
-    # hash(item) layout, so at scale the ca/cb joins can read it
-    # co-partitioned.
+    # hash(item) layout, which at most spares the cnt side its own
+    # re-exchange in a sort-merge join. co is hash(item_a, item_b)-
+    # partitioned after its pair groupBy, so the co⋈ca/cb joins are
+    # not co-partitioned (and at small scale AQE broadcasts ca/cb).
     cnt = checkpoint_preserving(
         ui.groupBy("item").agg(F.count(F.lit(1)).alias("n")))
     a, b = ui.alias("a"), ui.alias("b")

@@ -341,13 +341,10 @@ def s07_stream_processing_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     always-on production mode (AvailableNow, used by s03-s06, is the
     drain-and-stop mode). The query fires every 500 ms against the
     same out-of-order replay source and is stopped once the source is
-    observed drained: two consecutive progress reports with zero
-    input rows. Final state arrives via the bounded ``memory``
+    drained. Final state arrives via the bounded ``memory``
     complete-mode sink, exactly like s03, and must equal the batch
     answer (tests/test_streaming.py mirrors s03's equivalence
     assertion)."""
-    import time
-
     src, ev = write_replay_source(spark, sf_dir)
     name = _mem_table_name("s07_state")
     q = (
@@ -358,22 +355,10 @@ def s07_stream_processing_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
         .start()
     )
-    # stop once drained: ProcessingTime runs forever by design, so
-    # "done" = two consecutive empty micro-batches after at least one
-    # non-empty one (the source is static — no new files can arrive)
-    deadline = time.monotonic() + 120
-    empty_streak, saw_data, last_batch = 0, False, -1
-    while time.monotonic() < deadline:
-        p = q.lastProgress
-        if p is not None and p["batchId"] != last_batch:
-            last_batch = p["batchId"]  # count each micro-batch once
-            if p["numInputRows"] > 0:
-                saw_data, empty_streak = True, 0
-            else:
-                empty_streak += 1
-            if saw_data and empty_streak >= 2:
-                break
-        time.sleep(0.25)
+    # ProcessingTime runs forever by design; the source is static
+    # files written before start(), so "drained" is exactly "every
+    # available input processed"
+    q.processAllAvailable()
     q.stop()
     q.awaitTermination()
     return spark.table(name)

@@ -18,136 +18,3 @@ def test_entry_schema_stable(spark):
     s2 = entry_mod.entry(spark).schema
     assert s1 == s2
 
-
-def test_contract_order_mechanism(monkeypatch, tmp_path):
-    """The driver caps CORRECTNESS at 50 entries from the head of
-    queries(), so _contract_order IS re-verification policy. Tests the
-    MECHANISM against a synthetic coverage/verified state (the r3
-    verdict: asserting live round state here goes stale the moment the
-    driver writes the next CORRECTNESS file). Expected classes:
-    never-covered q < declared-edited stale q < never-covered s <
-    co-located stale q < green rotation (fresh q AND covered s in one
-    tier, oldest driver record first — a strictly-last covered-s
-    class never re-enters the window once all q-ops are green,
-    VERDICT r10 item 3)."""
-    h_live = (tmp_path / "live.py")
-    h_live.write_bytes(b"current kernel")
-    live_hash = entry_mod._current_file_hashes([str(h_live)])[str(h_live)]
-
-    covered = {"q01_fresh", "q02_stale", "q03_oldfresh", "s01_seen",
-               "q06_declared"}
-    verified = {
-        # fresh: checked r3, file hash still matches
-        "q01_fresh": {"round": 3, "file": str(h_live), "sha256": live_hash},
-        # stale: checked r2, file rewritten since
-        "q02_stale": {"round": 2, "file": str(h_live), "sha256": "beef" * 16},
-        # fresh but checked earlier than q01 -> rotates ahead of it
-        "q03_oldfresh": {"round": 1, "file": str(h_live), "sha256": live_hash},
-        "s01_seen": {"round": 1, "file": str(h_live), "sha256": live_hash},
-        # declared semantic edit: stale AND named in REVERIFY_FIRST
-        "q06_declared": {"round": 2, "file": str(h_live),
-                         "sha256": "feed" * 16},
-    }
-    monkeypatch.setattr(entry_mod, "_driver_covered", lambda: set(covered))
-    monkeypatch.setattr(entry_mod, "_verified_map", lambda: dict(verified))
-    monkeypatch.setattr(entry_mod, "REVERIFY_FIRST",
-                        {"q06_declared", "q01_fresh"})
-
-    names = ["q01_fresh", "q02_stale", "q03_oldfresh", "q04_new",
-             "q05_new", "s01_seen", "s02_new", "q06_declared"]
-    order = entry_mod._contract_order(names)
-    assert order == [
-        "q04_new", "q05_new",          # never-covered q, id-ascending
-        "q06_declared",                 # declared semantic edit, stale
-        "s02_new",                      # first-ever s record
-        "q02_stale",                    # co-located stale (undeclared)
-        # green rotation: oldest driver record first, q before s
-        # within a round — s01_seen (r1) re-enters AHEAD of the
-        # r3-checked q01 (the recycling fix, VERDICT r10 item 3)
-        "q03_oldfresh", "s01_seen", "q01_fresh",
-        # (q01's REVERIFY_FIRST entry is inert: hash still matches)
-    ]
-    # unverifiable coverage (no VERIFIED entry / no hash) counts stale
-    monkeypatch.setattr(entry_mod, "_verified_map", lambda: {})
-    monkeypatch.setattr(entry_mod, "REVERIFY_FIRST", set())
-    order2 = entry_mod._contract_order(["q01_fresh", "q04_new"])
-    assert order2 == ["q04_new", "q01_fresh"]
-
-
-def test_contract_order_live_registry():
-    """Live invariants that hold in ANY round: queries() emits every
-    registry id exactly once, and the head-50 driver window never
-    contains a fresh id while a never-covered or stale q-op waits
-    outside it."""
-    order = list(entry_mod.queries().keys())
-    assert len(order) == len(set(order))
-
-    covered = entry_mod._driver_covered()
-    verified = entry_mod._verified_map()
-    cur = entry_mod._current_file_hashes(
-        v.get("file") for v in verified.values())
-    latest = max((v.get("round", 0) for v in verified.values()),
-                 default=0)
-
-    # independent re-derivation of the priority classes (docstring of
-    # _contract_order): 0 never-covered q, 1 declared-edited stale q,
-    # 2 never-covered s, 3 co-located stale q, 4 just-lapsed q
-    # (edited after a latest-round check), 5 the green rotation —
-    # fresh q AND covered s share one tier (the recycling fix,
-    # VERDICT r10 item 3)
-    def tier(n):
-        if not n.startswith("q"):
-            return 2 if n not in covered else 5
-        if n not in covered:
-            return 0
-        v = verified.get(n)
-        stale = (not v or not v.get("sha256")
-                 or cur.get(v.get("file")) != v["sha256"])
-        if not stale:
-            return 5
-        if n in entry_mod.REVERIFY_FIRST:
-            return 1
-        return 4 if v and v.get("round", 0) >= latest else 3
-
-    # no wasted slots: every id inside the 50-slot window must rank
-    # at most as low-priority as every id outside it
-    inside = [(tier(n), n) for n in order[:50]]
-    outside = [(tier(n), n) for n in order[50:]]
-    assert max(t for t, _ in inside) <= min(t for t, _ in outside), (
-        f"driver window wastes slots: {max(inside)} inside "
-        f"while {min(outside)} waits outside")
-
-
-def test_window_plan_matches_contract_order():
-    """scripts/window_plan.py's no-edit simulation must agree with the
-    live _contract_order (same window membership), and simulating an
-    edit to a file whose queries ALREADY head the window must be a
-    no-op (SAFE by construction) — state-independent invariants that
-    hold whatever VERIFIED.json says this round."""
-    import importlib.util
-    import os
-
-    import __spark_entry__ as entry_mod
-    from hearthstats_spark.queries.registry import load_all
-
-    spec = importlib.util.spec_from_file_location(
-        "window_plan",
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "scripts", "window_plan.py"))
-    wp = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(wp)
-
-    reg = load_all()
-    live = entry_mod._contract_order(reg)[:50]
-    sim, cls = wp._order_and_classes(set())
-    assert set(sim[:50]) == set(live)
-
-    # an edit to the file of a query already at the window head can
-    # only re-file ids that are in the window anyway
-    verified = entry_mod._verified_map()
-    head_q = next(n for n in live if n.startswith("q"))
-    f = verified.get(head_q, {}).get("file")
-    if f:
-        sim2, _ = wp._order_and_classes({f})
-        assert set(sim2[:50]) >= {n for n in live
-                                  if verified.get(n, {}).get("file") == f}

@@ -81,6 +81,7 @@ def test_survey_table_matches_registry(registry):
 
 def test_entry_module_exports(registry):
     import __spark_entry__ as entry_mod
+    from hearthstats_spark.queries.registry import load_all
 
     q = entry_mod.queries()
     o = entry_mod.oracle_sql()
@@ -88,3 +89,7 @@ def test_entry_module_exports(registry):
     assert set(o) == {n for n, r in registry.items() if r.oracle is not None}
     assert all(callable(f) for f in q.values())
     assert all(isinstance(s, str) and s.strip() for s in o.values())
+    # declared order, no reordering: the oracle sweep, not the order
+    # of this dict, is the coverage policy
+    assert list(q) == list(load_all())
+    assert list(o) == [n for n in q if n in o]
