@@ -26,9 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (q15 pricing summary, TPC-H Q1 shape) on
     /root/testdata/sf0.001; driver checks rows>0."""
     from hearthstats_spark.queries.registry import load_all
-    from hearthstats_spark.session import ensure_conf
 
-    ensure_conf(spark)
     reg = load_all()
     return reg["q15_agg_pricing"].fn(spark, "/root/testdata/sf0.001")
 

@@ -24,21 +24,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hearthstats_spark.session import ensure_conf
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _enable_nanos_as_long(spark: SparkSession) -> None:
-    """Runtime-set the legacy ns flag (the driver may hand us a session
-    we did not build)."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
 
 
 #: partition-directory helper columns a layout copy may add (see
@@ -88,7 +81,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return _normalize_events_ts(df) if name == "events" else df
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        _enable_nanos_as_long(spark)
+        ensure_conf(spark)  # nanosAsLong, for direct callers' sessions
         return _normalize_events_ts(
             _drop_partition_cols(spark.read.parquet(path)))
     return _drop_partition_cols(spark.read.parquet(path))

@@ -31,11 +31,11 @@ REGISTRY: dict[str, Query] = {}
 def register(name: str, oracle: str | None = None):
     """Decorator: add a (spark_fn, oracle) pair to the registry.
 
-    The registered callable applies the engine's runtime-settable
-    session conf first (UTC timezone, Arrow, AQE, nanosAsLong):
-    the driver invokes queries on a session IT built, and e.g. a
-    non-UTC session timezone would shift every date_format/window
-    boundary away from the DuckDB oracle's."""
+    The registered callable first re-applies the enforced settings
+    (``session.ensure_conf``: UTC, nanosAsLong, Arrow) and leaves the
+    caller's tuning alone: the driver invokes queries on a session IT
+    built, and e.g. a non-UTC session timezone would shift every
+    date_format/window boundary away from the DuckDB oracle's."""
     import functools
 
     def deco(fn: QueryFn) -> QueryFn:

@@ -160,14 +160,10 @@ def s10_partitioned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_f_before = pruned.count()
     n_o_before = back.filter(F.col("o_orderstatus") == "O").count()
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (o.filter(F.col("o_orderstatus") == "F")
-         .withColumn("o_totalprice", F.lit(0.0))
-         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(tdir))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (o.filter(F.col("o_orderstatus") == "F")
+     .withColumn("o_totalprice", F.lit(0.0))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("o_orderstatus").parquet(tdir))
 
     after = spark.read.schema(o.schema).parquet(tdir)
     n_f_zeroed = after.filter((F.col("o_orderstatus") == "F")

@@ -1,6 +1,8 @@
 """SparkSession bootstrap (SURVEY.md §4.2 / §7 step 0).
 
-Pins the configs every query in this engine relies on:
+Enforced settings (answers depend on them; ``ensure_conf`` re-applies
+them on every registered call, so a driver-built session still
+matches DuckDB):
 
 - ``spark.sql.session.timeZone=UTC`` — timestamp values must hash
   identically against the DuckDB oracle.
@@ -10,13 +12,17 @@ Pins the configs every query in this engine relies on:
   ``[PARQUET_TYPE_ILLEGAL]``). The loader converts the resulting
   bigint-ns column to a microsecond timestamp once, at load.
 - Arrow execution for every pandas UDF / toPandas path.
+
+Tuning settings change speed only: ``get_spark`` applies them, and no
+call touches a caller's own values.
+
 - AQE on (coalesce shuffle partitions + skew-join splitting): at
   100 TB AQE's runtime re-planning is the main defence against skew;
   at test scale it collapses the shuffle tail.
-- Modest shuffle parallelism by default (local mode): the driver's
-  bench runs at sf0.1 where 200 default partitions would be pure
-  scheduling overhead. On a real cluster set SPARK_GRAFT_SHUFFLE to
-  ~2-3x total executor cores.
+- Modest shuffle parallelism (32, local mode): the driver's bench
+  runs at sf0.1 where 200 default partitions would be pure
+  scheduling overhead. On a real cluster set ~2-3x total executor
+  cores on the session (or ``get_spark(extra_conf=...)``).
 """
 
 from __future__ import annotations
@@ -47,17 +53,22 @@ def _default_driver_mem() -> str:
     return "8g"
 
 
-_DEFAULTS: dict[str, str] = {
+#: answers depend on these; all are runtime-modifiable
+_ENFORCED: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
+#: speed only; applied by get_spark, never to a caller's session
+_TUNING: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # dims here are tiny; on a cluster this is the default 10MB anyway
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
     # exact-distinct inside 32 threads; bump on a real cluster
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+    "spark.sql.shuffle.partitions": "32",
     # allow co-partitioning on a SUBSET of the join keys: a frame
     # already hash-partitioned/bucketed by src joining on (src, dst)
     # then keeps its layout and only the other side moves — q98's
@@ -91,6 +102,7 @@ _DEFAULTS: dict[str, str] = {
     # On a real cluster each executor cleans its own few shuffles and
     # the setting is a no-op in practice.
     "spark.cleaner.referenceTracking.blocking.shuffle": "true",
+    # not enforced: every streaming op passes with Spark's default (on)
     "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "false",
 }
 
@@ -106,24 +118,17 @@ def get_spark(app_name: str = "hearthstats-spark", master: str | None = None,
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(_DEFAULTS)
-    if extra_conf:
-        conf.update(extra_conf)
+    conf = {**_ENFORCED, **_TUNING, **(extra_conf or {})}
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
-def ensure_conf(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime-settable configs to an externally
-    created session (the driver hands us one we didn't build)."""
-    for k, v in _DEFAULTS.items():
-        if k.startswith("spark.sql.") and "legacy.parquet" not in k:
-            try:
-                spark.conf.set(k, v)
-            except Exception:
-                pass  # static conf on a live session; loader handles the rest
-    return spark
+def ensure_conf(spark: SparkSession) -> None:
+    """Re-apply the enforced settings to a session, e.g. one the
+    driver built. Tuning settings are left as the caller set them."""
+    for k, v in _ENFORCED.items():
+        spark.conf.set(k, v)
 
 
 def stop_spark() -> None:

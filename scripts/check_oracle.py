@@ -5,12 +5,11 @@ Usage:
     python scripts/check_oracle.py [--sf /root/testdata/sf0.01]
         [--modules joins,aggregates] [--only q05,q06]
 
-Cluster-fan-out mode: ``SPARK_GRAFT_SHUFFLE=256 python
-scripts/check_oracle.py`` re-runs the whole sweep at cluster-scale
-shuffle parallelism — results must be (and are: round 11, 200/200)
-hash-identical to the 4-partition test-suite conf and the
-32-partition default, the partition-count-independence property
-SCALE.md §Session & runtime records.
+The sweep runs at ``get_spark``'s 32 shuffle partitions;
+``tests/test_oracle_sweep.py`` runs the same check at the test
+suite's 4. Both must be hash-identical to DuckDB — the
+partition-count-independence property SCALE.md §Session & runtime
+records.
 
 Triage notes for specific failures (ADVICE r10):
 

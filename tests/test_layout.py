@@ -76,6 +76,7 @@ def test_bucketed_join_has_no_exchange(spark):
         ob = spark.table("t_orders_b")
         lb = spark.table("t_lineitem_b")
         # force the join lane bucketing optimizes (not broadcast)
+        thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             joined = ob.join(lb, "k").select("k", "o_totalprice",
@@ -85,8 +86,7 @@ def test_bucketed_join_has_no_exchange(spark):
             assert "Exchange" not in p  # the whole point of bucketing
             assert joined.count() == li.count()  # FK integrity holds
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                           str(32 * 1024 * 1024))
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_orders_b")
         spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
@@ -124,6 +124,7 @@ def test_bucketed_triangle_census_wedge_join_bucket_local(spark):
                    sort_cols=["src"])
     try:
         ob = spark.table("t_tri_edges_b")
+        thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             tri = triangle_census(ob)
@@ -144,8 +145,7 @@ def test_bucketed_triangle_census_wedge_join_bucket_local(spark):
             ).collect()[0]["n_triangles"]
             assert tri.collect()[0]["n_triangles"] == want > 0
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                           str(32 * 1024 * 1024))
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_tri_edges_b")
 
@@ -164,6 +164,7 @@ def test_checkpoint_partitioned_preserves_layout(spark):
     part = str(ck._jdf.queryExecution().executedPlan().outputPartitioning())
     assert "hashpartitioning" in part and "k#" in part
 
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         j = ck.alias("a").join(ck.alias("b"),
@@ -172,8 +173,7 @@ def test_checkpoint_partitioned_preserves_layout(spark):
         assert "Exchange hashpartitioning" not in p
         assert j.count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                       str(32 * 1024 * 1024))
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
 
 
 def test_bucketed_pagerank_iteration_edge_side_shuffle_free(spark):
@@ -198,6 +198,7 @@ def test_bucketed_pagerank_iteration_edge_side_shuffle_free(spark):
     write_bucketed(ud, "t_edges_b", ["src"], 8, sort_cols=["src"])
     try:
         udb = spark.table("t_edges_b")
+        thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             ranks = nodes.select("node", F.lit(1.0).alias("rank"))
@@ -229,7 +230,6 @@ def test_bucketed_pagerank_iteration_edge_side_shuffle_free(spark):
                                             nodes, 2).collect()}
             assert split == exact
         finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                           str(32 * 1024 * 1024))
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     finally:
         spark.sql("DROP TABLE IF EXISTS t_edges_b")

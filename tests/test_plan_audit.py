@@ -250,10 +250,10 @@ def test_no_forced_broadcast_of_fact_frames(spark, registry, monkeypatch):
     """VERDICT r4 #1's missing rule: a forced ``F.broadcast`` on a
     frame derived from a fact-scale table (without a bounding
     aggregation) defeats AQE's size check — fine at sf0.1, an OOM at
-    the 100 TB design point. Thresholds go to -1 AFTER the query
-    builds (the registry wrapper's ensure_conf re-pins the session
-    default) and BEFORE the lazy planning that explain triggers, so
-    only hint-forced exchanges survive in the non-cached plan.
+    the 100 TB design point. Each query builds under the session's
+    broadcast threshold; thresholds go to -1 AFTER it builds and
+    BEFORE the lazy planning that explain triggers, so only
+    hint-forced exchanges survive in the non-cached plan.
 
     Allowance per query = static FORCED_BROADCAST_OK entry + the
     number of APPLIED ``broadcast_bounded`` guard sites recorded while
@@ -280,8 +280,9 @@ def test_no_forced_broadcast_of_fact_frames(spark, registry, monkeypatch):
         for name, q in sorted(registry.items()):
             if not name.startswith("q"):
                 continue
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
             n_sites0 = len(GUARDED_SITES)
-            df = q.fn(spark, SF_MED)  # ensure_conf runs here
+            df = q.fn(spark, SF_MED)
             guarded = sum(
                 1 for _, applied in GUARDED_SITES[n_sites0:] if applied)
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

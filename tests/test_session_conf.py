@@ -1,7 +1,8 @@
-"""Driver-session defensiveness: the driver invokes queries()[name]
-on a session IT built. Every registered query must repair the
-runtime-settable conf (UTC timezone above all — a non-UTC session
-shifts every date_format/window boundary off the DuckDB oracle)."""
+"""Driver-session contract: the driver invokes queries()[name] on a
+session IT built. Every registered call re-applies the enforced
+settings answers depend on (UTC timezone above all — a non-UTC
+session shifts every date_format/window boundary off the DuckDB
+oracle) and leaves the caller's tuning exactly as it found it."""
 
 from __future__ import annotations
 
@@ -18,6 +19,30 @@ def test_registered_query_restores_utc(spark, registry):
         assert row, "no epoch-day-0 orders found"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+_CALLER_TUNING = {
+    "spark.sql.shuffle.partitions": "4",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.enabled": "false",
+}
+
+
+def test_registered_calls_keep_caller_tuning(spark, registry):
+    """A q-op and a side-effect s-op on a driver-built session: its
+    tuning and its partition-overwrite mode survive both calls; only
+    the enforced timezone is forced back to UTC."""
+    s = spark.newSession()
+    for k, v in _CALLER_TUNING.items():
+        s.conf.set(k, v)
+    s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    overwrite = "spark.sql.sources.partitionOverwriteMode"
+    mode = s.conf.get(overwrite)
+    for name in ("q03_filter_complex", "s10_partitioned_layout"):
+        assert registry[name].fn(s, SF_SMALL).collect()
+    assert {k: s.conf.get(k) for k in _CALLER_TUNING} == _CALLER_TUNING
+    assert s.conf.get(overwrite) == mode
+    assert s.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
 def test_wrapped_fn_keeps_metadata(registry):
