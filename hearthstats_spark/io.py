@@ -11,6 +11,33 @@ as TIMESTAMP_NTZ. ``load_table`` normalizes both — once, at load — to
 a plain microsecond TIMESTAMP under the engine's pinned UTC session
 timezone, so every downstream query sees one stable type.
 
+Each path read is resolved once per session. The first
+``load_table`` of a source in a SparkSession runs Spark's schema
+inference (one small Spark job); the inferred schema is remembered
+per (session, source path, source fingerprint) in a weak mapping,
+and every later call reads with that declared schema, which runs no
+job. Only the schema is remembered, never the DataFrame: each call
+builds a new relation with new attribute ids, so self-joins and
+``df["col"]`` references behave as with a plain read. A rewritten
+source has a new fingerprint (``operators/ann_index.source_fingerprint``)
+and is inferred afresh.
+
+A large flat source is also read in a layout that uses every core.
+Spark splits a file scan into ``min(maxPartitionBytes,
+max(openCostInBytes, bytes / cores))``-byte pieces but never splits
+a parquet row group, so a one-row-group file scans as one task. When
+the source is one parquet file larger than ``openCostInBytes`` with
+fewer row groups than ``defaultParallelism``, ``load_table`` reads a
+copy instead: the same rows, values and schema, rewritten with
+pyarrow (no Spark job) into ``2 × defaultParallelism`` row groups.
+The copy lives in the artifact store (``operators/ann_index``: under
+``SPARK_GRAFT_ANN_CACHE_DIR`` or the per-user default root), keyed by
+the source fingerprint and the row-group target, committed through
+the store's rename protocol, and named ``<table>.parquet`` inside its
+directory so plans still name the table. Smaller files, directories
+and sessions with the artifact store disabled
+(``SPARK_GRAFT_ANN_CACHE=0``) read the source in place.
+
 At 100 TB these would be directory-partitioned datasets (orders and
 lineitem partitioned by month of their date column, events by day)
 so that Catalyst's partition pruning and dynamic partition pruning
@@ -20,10 +47,13 @@ kick in; the loaders keep that concern in one place.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from hearthstats_spark.operators import ann_index
 from hearthstats_spark.session import ensure_conf
 
 TABLES = (
@@ -79,12 +109,78 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # invariant by construction, not by writer convention)
             df = _drop_partition_cols(spark.table(catalog_name))
             return _normalize_events_ts(df) if name == "events" else df
-    path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         ensure_conf(spark)  # nanosAsLong, for direct callers' sessions
         return _normalize_events_ts(
-            _drop_partition_cols(spark.read.parquet(path)))
-    return _drop_partition_cols(spark.read.parquet(path))
+            _drop_partition_cols(_read_parquet(spark, sf_dir, name)))
+    return _drop_partition_cols(_read_parquet(spark, sf_dir, name))
+
+
+#: per session: (source path, source fingerprint) -> (inferred
+#: schema, row groups of the split copy or 0 to read in place)
+_RESOLVED: weakref.WeakKeyDictionary[
+    SparkSession, dict[tuple[str, str], tuple[StructType, int]]
+] = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read ``<sf_dir>/<name>.parquet`` resolved once per session
+    (see the module docstring): the split decision and Spark's schema
+    inference run on the first call, later calls read with the
+    remembered schema and run no Spark job."""
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    key = (src, ann_index.source_fingerprint(src))
+    resolved = _RESOLVED.setdefault(spark, {})
+    schema, groups = resolved.get(key) or (None, _split_groups(spark, src))
+    path = src
+    if groups and ann_index.cache_enabled():
+        path = _split_copy(sf_dir, name, groups)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    resolved[key] = (df.schema, groups)
+    return df
+
+
+def _split_groups(spark: SparkSession, src: str) -> int:
+    """Row groups for a split copy of ``src``, or 0 to read it in
+    place. A file no larger than ``openCostInBytes`` is never split
+    by Spark (maxSplitBytes is at least openCostInBytes), and one
+    with ``defaultParallelism`` row groups already fills the cores."""
+    if not os.path.isfile(src):
+        return 0
+    open_cost = spark._jsparkSession.sessionState().conf() \
+        .filesOpenCostInBytes()
+    if os.path.getsize(src) <= open_cost:
+        return 0
+    import pyarrow.parquet as pq
+
+    cores = spark.sparkContext.defaultParallelism
+    if pq.read_metadata(src).num_row_groups >= cores:
+        return 0
+    return 2 * cores
+
+
+def _split_copy(sf_dir: str, name: str, groups: int) -> str:
+    """Path of ``name``'s copy with about ``groups`` row groups,
+    written with pyarrow and committed once per source fingerprint."""
+    import pyarrow.parquet as pq
+
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    art = ann_index.artifact_path(sf_dir, f"split_{name}_rg{groups}",
+                                  table=name)
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp)
+        with pq.ParquetFile(src) as pf, pq.ParquetWriter(
+                os.path.join(tmp, f"{name}.parquet"), pf.schema_arrow) as out:
+            rows = -(-pf.metadata.num_rows // groups)  # ceil
+            for batch in pf.iter_batches(batch_size=rows):
+                out.write_batch(batch, row_group_size=rows)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    ann_index.commit_artifact(art, write)
+    return os.path.join(art, f"{name}.parquet")
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -43,6 +43,10 @@ re-checks ``_SUCCESS`` in a bounded retry LOOP rather than one
 unguarded rmtree+rename (ADVICE r7: a one-shot fallback could
 delete a racer's just-committed artifact and then collide).
 
+The same store holds ``io.load_table``'s split copies of large
+one-row-group source files (written with pyarrow, not Spark, and
+committed by the same ``commit_artifact`` loop).
+
 The default cache root is per-user (uid-keyed, mode 0700, ownership
 verified before any read) — a world-writable shared tempdir would
 let a pre-planted directory with a matching key be served silently
@@ -110,13 +114,18 @@ def _file_token(path: str, rel: str) -> str:
     return f"{rel}:{st.st_size}:{st.st_mtime_ns}"
 
 
-def _fingerprint(sf_dir: str, table: str) -> str:
-    """One token per file under the source table — any regeneration
-    of the parquet data changes the key (see _fp_mode)."""
-    base = os.path.join(sf_dir, f"{table}.parquet")
+def source_fingerprint(base: str) -> str:
+    """One token per file under ``base`` (a file or a directory,
+    walked in sorted order) — any regeneration of the data changes
+    the result (see _fp_mode). Shared by the artifact keys here, the
+    per-session table memo in ``io.load_table`` and the layout
+    rehearsal's rebuild check (scripts/check_layout_parity.py)."""
     parts = []
     if os.path.isdir(base):
-        for root, _dirs, files in os.walk(base):
+        # dirs.sort() in place BEFORE the walk descends: os.walk
+        # honours in-place reordering, so traversal is deterministic
+        for root, dirs, files in os.walk(base):
+            dirs.sort()
             for f in sorted(files):
                 p = os.path.join(root, f)
                 parts.append(_file_token(p, os.path.relpath(p, base)))
@@ -127,11 +136,48 @@ def _fingerprint(sf_dir: str, table: str) -> str:
 
 def artifact_path(sf_dir: str, name: str, table: str = "embeddings",
                   version: int = 1) -> str:
+    fp = source_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
     key = hashlib.sha256(
-        f"{name}|fmt{_FORMAT_VERSION}|v{version}|"
-        f"{_fingerprint(sf_dir, table)}".encode()
+        f"{name}|fmt{_FORMAT_VERSION}|v{version}|{fp}".encode()
     ).hexdigest()[:16]
     return os.path.join(_cache_root(), f"{name}_{key}")
+
+
+def commit_artifact(path: str, write) -> None:
+    """Build ``path`` once: unless it is already committed (holds a
+    ``_SUCCESS`` marker), ``write(tmp)`` fills a process-unique temp
+    dir — ending with ``_SUCCESS`` — which is then renamed into place
+    (see the module note's write protocol). The one commit loop for
+    every artifact: ``persisted``'s frames and ``io.load_table``'s
+    split copies."""
+    if os.path.isfile(os.path.join(path, "_SUCCESS")):
+        return
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    write(tmp)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    # commit loop (ADVICE r7): rename, and on failure re-check for a
+    # committed winner BEFORE touching the target — a one-shot
+    # "rmtree then rename" could delete an artifact a racer committed
+    # between check and delete, then collide with a second fallback
+    # writer. Every competing attempt writes bytes-equal content, so
+    # reading any winner is correct; the loop only has to terminate.
+    for _attempt in range(16):
+        try:
+            os.rename(tmp, path)
+            return
+        except OSError:
+            if os.path.isfile(os.path.join(path, "_SUCCESS")):
+                # lost the race to an identical-content winner
+                shutil.rmtree(tmp, ignore_errors=True)
+                return
+            # a crashed writer's half-committed remnant (no _SUCCESS —
+            # renames are atomic and tmp dirs carry _SUCCESS before
+            # commit) blocks the rename: clear it and RETRY; if a racer
+            # commits inside this gap, the next iteration reads its
+            # _SUCCESS instead of renaming over it
+            shutil.rmtree(path, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
+    raise RuntimeError(f"could not commit artifact {path} after 16 attempts")
 
 
 def persisted(spark: SparkSession, sf_dir: str, name: str, build,
@@ -144,35 +190,6 @@ def persisted(spark: SparkSession, sf_dir: str, name: str, build,
     if not cache_enabled():
         return build()
     path = artifact_path(sf_dir, name, table, version)
-    if not os.path.isfile(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        build().write.mode("overwrite").parquet(tmp)
-        os.makedirs(_cache_root(), exist_ok=True)
-        # commit loop (ADVICE r7): rename, and on failure re-check
-        # for a committed winner BEFORE touching the target — a
-        # one-shot "rmtree then rename" could delete an artifact a
-        # racer committed between check and delete, then collide
-        # with a second fallback writer. Every competing attempt
-        # writes bytes-equal content, so reading any winner is
-        # correct; the loop only has to terminate.
-        for _attempt in range(16):
-            try:
-                os.rename(tmp, path)
-                break
-            except OSError:
-                if os.path.isfile(os.path.join(path, "_SUCCESS")):
-                    # lost the race to an identical-content winner
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    break
-                # a crashed writer's half-committed remnant (no
-                # _SUCCESS — renames are atomic and tmp dirs carry
-                # _SUCCESS before commit) blocks the rename: clear
-                # it and RETRY; if a racer commits inside this gap,
-                # the next iteration reads its _SUCCESS instead of
-                # renaming over it
-                shutil.rmtree(path, ignore_errors=True)
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"could not commit artifact {path} after 16 attempts")
+    commit_artifact(
+        path, lambda tmp: build().write.mode("overwrite").parquet(tmp))
     return spark.read.parquet(path)

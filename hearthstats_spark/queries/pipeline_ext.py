@@ -432,6 +432,15 @@ def q94_item_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint) was A/B'd in the same windows: it ties locally
     # (2.80 vs 2.82 s interleaved medians) but pays TWO extra
     # distinct-frame exchanges at the join — wrong at scale.
+    #
+    # Skew tradeoff (ADVICE r12): hashing the RAW view rows by
+    # user_id alone puts every row of a whale user — duplicates
+    # included, since distinct runs after the exchange — into one
+    # partition, and the job runs inside checkpoint_preserving's
+    # AQE-off window, so no skew-join split or partition coalescing
+    # helps. The r11 form's first exchange spread rows by
+    # (user_id, item). At scale the per-user cap the docstring
+    # describes belongs before this repartition.
     ui = checkpoint_preserving(
         e.filter(F.col("event_type") == "view")
         .select("user_id",

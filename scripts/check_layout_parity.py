@@ -53,27 +53,19 @@ PARTITIONED = {"events": ("ts", "day")}
 
 
 def src_fingerprint(src_sf: str) -> str:
-    """Content fingerprint of a source sf dir: sha256 over every
-    file's (relpath, size, mtime_ns), sorted. Recorded in the layout
-    manifest so a regenerated testdata corpus triggers an automatic
-    cache rebuild instead of a spurious parity failure against stale
-    layout data (ADVICE r9 item 4). mtime inclusion errs toward
-    rebuilding too often — the fail-safe direction."""
+    """Fingerprint of a source sf dir: sha256 over the artifact
+    store's per-file (relpath, size, mtime_ns) tokens
+    (``ann_index.source_fingerprint``, walked in sorted order).
+    Recorded in the layout manifest so a regenerated testdata corpus
+    triggers an automatic cache rebuild instead of a spurious parity
+    failure against stale layout data (ADVICE r9 item 4). mtime
+    inclusion errs toward rebuilding too often — the fail-safe
+    direction."""
     import hashlib
 
-    h = hashlib.sha256()
-    # dirs.sort() BEFORE the generator advances: os.walk honors
-    # in-place reordering of dirs, making traversal deterministic
-    # (a sorted() wrapper would exhaust the generator first and the
-    # sort would be dead code — round-10 self-review find)
-    for root, dirs, files in os.walk(src_sf):
-        dirs.sort()
-        for f in sorted(files):
-            p = os.path.join(root, f)
-            st = os.stat(p)
-            h.update(f"{os.path.relpath(p, src_sf)}\x1f{st.st_size}"
-                     f"\x1f{st.st_mtime_ns}\n".encode())
-    return h.hexdigest()
+    from hearthstats_spark.operators.ann_index import source_fingerprint
+
+    return hashlib.sha256(source_fingerprint(src_sf).encode()).hexdigest()
 
 
 def build_layout(spark, src_sf: str, dst: str) -> None:

@@ -1,0 +1,176 @@
+"""io.load_table resolves each table once per session and reads a
+large one-row-group file through a split copy (hearthstats_spark/io.py
+module docstring): later reads run no Spark job, the copy holds the
+source's rows and schema in enough row groups to fill the cores, a
+rewritten source is never served stale, and small files are read in
+place."""
+
+from __future__ import annotations
+
+import hashlib
+import os
+import shutil
+import time
+import uuid
+from urllib.parse import urlparse
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+
+from tests.conftest import SF_SMALL
+
+SF_LARGE = os.path.join(os.path.dirname(SF_SMALL), "sf0.1")
+
+
+@pytest.fixture
+def cache_dir(tmp_path, monkeypatch):
+    d = str(tmp_path / "artifacts")
+    monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE_DIR", d)
+    monkeypatch.delenv("SPARK_GRAFT_ANN_CACHE", raising=False)
+    return d
+
+
+def _jobs_of(spark, fn) -> list:
+    """Run ``fn`` under a fresh job group; return the group's jobs as
+    (job id, max tasks of one stage). The status tracker is fed by the
+    asynchronous, in-order listener bus, so a marker job submitted
+    afterwards is awaited first: once it is visible, so is every job
+    ``fn`` submitted."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def in_group(group, body):
+        sc.setJobGroup(group, group)
+        try:
+            return body()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    group = f"test-io-{uuid.uuid4().hex[:8]}"
+    in_group(group, fn)
+    in_group(f"{group}-marker", lambda: sc.parallelize([0], 1).count())
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-marker"):
+        assert time.time() < deadline, "marker job never became visible"
+        time.sleep(0.05)
+    out = []
+    for jid in tracker.getJobIdsForGroup(group):
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(jid).stageIds]
+        out.append((jid, max(s.numTasks for s in stages if s is not None)))
+    return out
+
+
+def _local_files(df) -> list[str]:
+    return [urlparse(f).path for f in df.inputFiles()]
+
+
+def _open_cost(spark) -> int:
+    return spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+
+
+def test_second_load_runs_no_spark_job(spark):
+    """The first load in a session infers the schema with a Spark
+    job; every later load of the same table reads with the remembered
+    schema and submits none."""
+    from hearthstats_spark.io import load_table
+
+    session = spark.newSession()  # nothing resolved in it yet
+    for name in ("lineitem", "events"):
+        first = _jobs_of(session, lambda: load_table(session, SF_SMALL, name))
+        assert first, f"{name}: first load should infer with a job"
+        frames = []
+        again = _jobs_of(session, lambda: frames.append(
+            load_table(session, SF_SMALL, name)))
+        assert again == [], f"{name}: second load ran jobs {again}"
+        # a new relation per call: same schema, and events.ts still
+        # normalized to a plain timestamp
+        assert frames[0].schema == load_table(session, SF_SMALL, name).schema
+        if name == "events":
+            assert dict(frames[0].dtypes)["ts"] == "timestamp"
+
+
+def test_large_file_split_copy_matches_source(spark, cache_dir):
+    """sf0.1 lineitem is one row group above openCostInBytes: it is
+    read from a copy with at least defaultParallelism row groups, the
+    same Spark schema and the same canonical rows, whose scan runs
+    more than one task."""
+    from pyspark.sql import functions as F
+
+    from hearthstats_spark.io import load_table
+    from hearthstats_spark.oracle import canon_rows
+
+    src = os.path.join(SF_LARGE, "lineitem.parquet")
+    assert os.path.getsize(src) > _open_cost(spark)
+    assert pq.ParquetFile(src).metadata.num_row_groups == 1
+
+    df = load_table(spark, SF_LARGE, "lineitem")
+    [copy] = _local_files(df)
+    assert copy.startswith(cache_dir + os.sep)
+    assert os.path.basename(copy) == "lineitem.parquet"  # plans name the table
+    cores = spark.sparkContext.defaultParallelism
+    assert pq.ParquetFile(copy).metadata.num_row_groups >= cores
+
+    orig = spark.read.parquet(src)
+    assert df.schema == orig.schema
+
+    def digest(frame):
+        # canonical rows per l_orderkey band hold a quarter of the
+        # table in Python at a time; equal bands = equal multisets
+        h = hashlib.sha256()
+        for band in range(4):
+            pdf = frame.filter(F.col("l_orderkey") % 4 == band).toPandas()
+            h.update(repr(canon_rows(pdf)).encode())
+        return h.hexdigest()
+
+    assert digest(df) == digest(orig)
+
+    scans = _jobs_of(spark, lambda: df.agg(F.sum("l_quantity")).collect())
+    assert max(tasks for _, tasks in scans) > 1, scans
+
+
+def test_rewritten_source_is_never_served_stale(spark, cache_dir, tmp_path):
+    """Rewriting a source file gives it a new fingerprint: the next
+    load infers the new schema and builds a new copy, so it returns
+    the new rows and columns."""
+    from pyspark.sql import functions as F
+
+    from hearthstats_spark.io import load_table
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    dst = str(sf / "lineitem.parquet")
+    shutil.copyfile(os.path.join(SF_LARGE, "lineitem.parquet"), dst)
+    before = load_table(spark, str(sf), "lineitem")
+    assert before.count() == 600_000
+    [copy_before] = _local_files(before)
+
+    # different rows and a different schema, still one row group
+    # large enough to split
+    new = pq.read_table(dst).slice(0, 400_000).drop_columns(["l_tax"])
+    os.remove(dst)
+    pq.write_table(new, dst, row_group_size=new.num_rows)
+    assert os.path.getsize(dst) > _open_cost(spark)
+
+    after = load_table(spark, str(sf), "lineitem")
+    [copy_after] = _local_files(after)
+    assert copy_after != copy_before
+    assert after.columns == new.column_names
+    [row] = after.agg(F.count(F.lit(1)).alias("n"),
+                      F.sum("l_orderkey").alias("s")).collect()
+    assert (row["n"], row["s"]) == (
+        400_000, pc.sum(new.column("l_orderkey")).as_py())
+
+
+def test_small_files_are_read_in_place(spark, cache_dir):
+    """Every sf0.001 file is below openCostInBytes, so Spark would
+    not split it whatever its row groups: each table reads its source
+    file directly and nothing is written to the artifact store."""
+    from hearthstats_spark.io import TABLES, load_table
+
+    for name in TABLES:
+        src = os.path.join(SF_SMALL, f"{name}.parquet")
+        assert os.path.getsize(src) <= _open_cost(spark)
+        assert _local_files(load_table(spark, SF_SMALL, name)) == [src], name
+    assert not os.path.exists(cache_dir) or not os.listdir(cache_dir)

@@ -132,7 +132,7 @@ def test_q199_funnel_monotone(spark, registry):
                 + rows["test"][col]) == rows["deduped"][col]
 
 
-def test_q94_ui_materialization_single_exchange_and_layout(spark):
+def test_q94_ui_materialization_single_exchange_and_layout(spark, registry):
     """q94's r12 materialization contract (VERDICT r11 item 5):
 
     - repartition(user_id) BEFORE distinct lets the planner satisfy
@@ -145,6 +145,9 @@ def test_q94_ui_materialization_single_exchange_and_layout(spark):
       derived from a localCheckpoint is re-instanced by relation
       dedup and silently never substitutes — q108's measured
       failure), keeping hash(item) for the ca/cb attach joins.
+
+    The registry-built q94 frame is pinned too, so drift in q94
+    itself (not only in this mirror of its shape) fails the test.
     """
     from pyspark.sql import functions as F
 
@@ -181,3 +184,19 @@ def test_q94_ui_materialization_single_exchange_and_layout(spark):
     assert "hashpartitioning" in cnt_part and "item#" in cnt_part
     # and the materialized dedup really is a distinct
     assert ui.count() == base.distinct().count()
+
+    # q94 as registered, broadcast lane off (the shape at scale): the
+    # self-join and both cnt attach joins read their checkpointed
+    # layouts in place, so the plan holds exactly three exchanges —
+    # the pair groupBy's and co's re-keys to item_a and item_b — and
+    # none on user_id
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        q94 = registry["q94_item_cooccur"].fn(spark, SF_SMALL)
+        q94_plan = q94._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    assert len(re.findall(r"Exchange", q94_plan)) == 3, q94_plan
+    assert not re.search(r"Exchange hashpartitioning\(user_id", q94_plan), \
+        q94_plan
