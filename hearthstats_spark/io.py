@@ -20,7 +20,8 @@ job. Only the schema is remembered, never the DataFrame: each call
 builds a new relation with new attribute ids, so self-joins and
 ``df["col"]`` references behave as with a plain read. A rewritten
 source has a new fingerprint (``operators/ann_index.source_fingerprint``)
-and is inferred afresh.
+and is inferred afresh. ``ann_index.persisted`` reads its committed
+artifacts back through the same memo (``read_artifact``).
 
 A large flat source is also read in a layout that uses every core.
 Spark splits a file scan into ``min(maxPartitionBytes,
@@ -116,8 +117,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _drop_partition_cols(_read_parquet(spark, sf_dir, name))
 
 
-#: per session: (source path, source fingerprint) -> (inferred
-#: schema, row groups of the split copy or 0 to read in place)
+#: per session: (read key) -> (inferred schema, row groups of the
+#: split copy or 0 to read in place). A table's key is (source path,
+#: source fingerprint); an artifact's is (artifact path, "").
 _RESOLVED: weakref.WeakKeyDictionary[
     SparkSession, dict[tuple[str, str], tuple[StructType, int]]
 ] = weakref.WeakKeyDictionary()
@@ -130,13 +132,31 @@ def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     remembered schema and run no Spark job."""
     src = os.path.join(sf_dir, f"{name}.parquet")
     key = (src, ann_index.source_fingerprint(src))
-    resolved = _RESOLVED.setdefault(spark, {})
-    schema, groups = resolved.get(key) or (None, _split_groups(spark, src))
+    hit = _RESOLVED.get(spark, {}).get(key)
+    groups = hit[1] if hit else _split_groups(spark, src)
     path = src
     if groups and ann_index.cache_enabled():
         path = _split_copy(sf_dir, name, groups)
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
+    return _read_resolved(spark, key, path, groups)
+
+
+def read_artifact(spark: SparkSession, path: str) -> DataFrame:
+    """Read a committed artifact directory (``ann_index.persisted``)
+    resolved once per session. Its path already encodes the source
+    fingerprint, and a committed artifact is never rewritten, so the
+    path alone keys the remembered schema."""
+    return _read_resolved(spark, (path, ""), path, 0)
+
+
+def _read_resolved(spark: SparkSession, key: tuple[str, str], path: str,
+                   groups: int) -> DataFrame:
+    """``path`` read with the schema remembered under ``key`` in this
+    session; the first read infers it (one Spark job) and records it
+    with ``groups``."""
+    resolved = _RESOLVED.setdefault(spark, {})
+    hit = resolved.get(key)
+    if hit is not None:
+        return spark.read.schema(hit[0]).parquet(path)
     df = spark.read.parquet(path)
     resolved[key] = (df.schema, groups)
     return df

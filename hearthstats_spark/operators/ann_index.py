@@ -186,10 +186,13 @@ def persisted(spark: SparkSession, sf_dir: str, name: str, build,
     from the content-keyed parquet cache, training and committing it
     first if this (source content, name, version) was never built.
     With the cache disabled, exactly ``build()`` — the original
-    self-contained plan."""
+    self-contained plan. The read-back infers the artifact's schema
+    once per session (``io.read_artifact``); later reads run no job."""
+    from hearthstats_spark.io import read_artifact  # io imports this module
+
     if not cache_enabled():
         return build()
     path = artifact_path(sf_dir, name, table, version)
     commit_artifact(
         path, lambda tmp: build().write.mode("overwrite").parquet(tmp))
-    return spark.read.parquet(path)
+    return read_artifact(spark, path)

@@ -372,7 +372,7 @@ def q106_join_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~3× on the sf0.1 block sizes. Semantics identical to
     # levenshtein(na, nb) <= 2.
     lev = F.levenshtein("na", "nb", 2)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     pairs = (
         a.repartition(n_part, "nationkey", "band")
         .hint("shuffle_hash")

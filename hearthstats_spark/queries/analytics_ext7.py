@@ -433,9 +433,10 @@ def q168_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials to the final key. Correct for any algebraic aggregate
     (count/sum/max compose; the oracle is the PLAIN group-by, so the
     equivalence is hash-checked, not asserted). With only 5 priority
-    groups under 32 shuffle partitions, an unsalted agg at 100 TB
-    puts a fifth of the table through one reducer — the salt makes
-    reducer load uniform at the cost of a tiny second hash agg.
+    groups, an unsalted agg at 100 TB puts a fifth of the table
+    through one reducer whatever the shuffle partition count — the
+    salt makes reducer load uniform at the cost of a tiny second hash
+    agg.
 
     Note Spark's own partial aggregation already does map-side
     combining, which solves MOST group skew; explicit salting is the

@@ -19,10 +19,15 @@ call touches a caller's own values.
 - AQE on (coalesce shuffle partitions + skew-join splitting): at
   100 TB AQE's runtime re-planning is the main defence against skew;
   at test scale it collapses the shuffle tail.
-- Modest shuffle parallelism (32, local mode): the driver's bench
-  runs at sf0.1 where 200 default partitions would be pure
-  scheduling overhead. On a real cluster set ~2-3x total executor
-  cores on the session (or ``get_spark(extra_conf=...)``).
+- Shuffle parallelism from the cores: ``get_spark`` sets
+  ``spark.sql.shuffle.partitions`` to the session's
+  ``defaultParallelism`` (the ``local[N]`` thread count, or the
+  executor cores at start-up on a cluster) unless ``extra_conf``
+  names it. A fixed count over- or under-fans the host, and AQE
+  cannot coalesce an ``availableNow`` micro-batch: a new streaming
+  checkpoint plans exactly this many state partitions (an existing
+  one keeps the count it recorded). On a real cluster ~2-3x the
+  executor cores is the usual ``extra_conf`` choice.
 """
 
 from __future__ import annotations
@@ -67,8 +72,6 @@ _TUNING: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # dims here are tiny; on a cluster this is the default 10MB anyway
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    # exact-distinct inside 32 threads; bump on a real cluster
-    "spark.sql.shuffle.partitions": "32",
     # allow co-partitioning on a SUBSET of the join keys: a frame
     # already hash-partitioned/bucketed by src joining on (src, dst)
     # then keeps its layout and only the other side moves — q98's
@@ -79,7 +82,7 @@ _TUNING: dict[str, str] = {
     "spark.sql.requireAllClusterKeysForCoPartition": "false",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": "128m",
-    # local mode = 32 executor threads + every cached/checkpointed
+    # local mode = every executor thread + every cached/checkpointed
     # block in ONE JVM: 8g caused visible GC churn across bench's 280
     # query executions (q88 read 12.4 s in-bench vs 5.2 s with a 24g
     # heap on the 125 GiB bench box) — but a flat 24g fails to launch
@@ -112,7 +115,9 @@ def get_spark(app_name: str = "hearthstats-spark", master: str | None = None,
     """Build (or fetch) the engine's SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores if
-    unset). On a cluster, leave ``master`` to spark-submit.
+    unset). On a cluster, leave ``master`` to spark-submit. Shuffle
+    partitions follow the session's cores unless ``extra_conf`` sets
+    them (see the module docstring).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -121,7 +126,11 @@ def get_spark(app_name: str = "hearthstats-spark", master: str | None = None,
     conf = {**_ENFORCED, **_TUNING, **(extra_conf or {})}
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        spark.conf.set("spark.sql.shuffle.partitions",
+                       str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 def ensure_conf(spark: SparkSession) -> None:

@@ -5,11 +5,13 @@ Usage:
     python scripts/check_oracle.py [--sf /root/testdata/sf0.01]
         [--modules joins,aggregates] [--only q05,q06]
 
-The sweep runs at ``get_spark``'s 32 shuffle partitions;
-``tests/test_oracle_sweep.py`` runs the same check at the test
-suite's 4. Both must be hash-identical to DuckDB — the
-partition-count-independence property SCALE.md §Session & runtime
-records.
+The sweep runs at ``get_spark``'s shuffle partitions, one per core
+(``defaultParallelism``); ``tests/test_oracle_sweep.py`` runs the
+same check at the test suite's 4. ``SPARK_GRAFT_CPUS=32`` runs the
+sweep on ``local[32]`` (32 threads), which reproduces the
+32-partition leg on any host. Every leg must be hash-identical to
+DuckDB — the partition-count-independence property SCALE.md
+§Session & runtime records.
 
 Triage notes for specific failures (ADVICE r10):
 

@@ -3,7 +3,8 @@ large one-row-group file through a split copy (hearthstats_spark/io.py
 module docstring): later reads run no Spark job, the copy holds the
 source's rows and schema in enough row groups to fill the cores, a
 rewritten source is never served stale, and small files are read in
-place."""
+place. ``ann_index.persisted`` reads its artifacts back through the
+same once-per-session resolution."""
 
 from __future__ import annotations
 
@@ -89,6 +90,28 @@ def test_second_load_runs_no_spark_job(spark):
         assert frames[0].schema == load_table(session, SF_SMALL, name).schema
         if name == "events":
             assert dict(frames[0].dtypes)["ts"] == "timestamp"
+
+
+def test_second_persisted_read_runs_no_spark_job(spark, cache_dir):
+    """A committed artifact's first read-back in a session infers its
+    schema with a Spark job; a second ``persisted`` read of it
+    submits none and returns the same schema and rows."""
+    from hearthstats_spark.operators.ann_index import persisted
+
+    session = spark.newSession()  # nothing resolved in it yet
+
+    def build():
+        return session.range(5).selectExpr("id", "id * 2 AS twice")
+
+    frames = []
+    first = _jobs_of(session, lambda: frames.append(
+        persisted(session, SF_SMALL, "io_probe", build)))
+    assert first, "first persisted call should build and infer with jobs"
+    again = _jobs_of(session, lambda: frames.append(
+        persisted(session, SF_SMALL, "io_probe", build)))
+    assert again == [], f"second persisted read ran jobs {again}"
+    assert frames[0].schema == frames[1].schema
+    assert sorted(frames[1].collect()) == sorted(build().collect())
 
 
 def test_large_file_split_copy_matches_source(spark, cache_dir):

@@ -49,3 +49,19 @@ def test_wrapped_fn_keeps_metadata(registry):
     q = registry["q15_agg_pricing"]
     assert q.fn.__name__ == "q15_agg_pricing"  # functools.wraps applied
     assert q.fn.__doc__
+
+
+def test_get_spark_derives_shuffle_partitions_from_cores(spark):
+    """``get_spark`` plans one shuffle (and new-checkpoint state)
+    partition per core unless the caller passes its own value."""
+    from hearthstats_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        s = get_spark()
+        assert s.conf.get(key) == str(s.sparkContext.defaultParallelism)
+        s = get_spark(extra_conf={key: "7"})
+        assert s.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prev)
