@@ -44,8 +44,13 @@ unguarded rmtree+rename (ADVICE r7: a one-shot fallback could
 delete a racer's just-committed artifact and then collide).
 
 The same store holds ``io.load_table``'s split copies of large
-one-row-group source files (written with pyarrow, not Spark, and
-committed by the same ``commit_artifact`` loop).
+one-row-group source files (written with pyarrow, not Spark), and the
+streaming replay sources of ``streaming/pipeline.write_replay_source``
+(five Spark-written parquet files per layout, served to each call as
+a directory of hard links, so a committed file must never be written
+to or have its mtime changed: every served link shares its inode, and
+the file source delivers in mtime order). Both are committed by the
+same ``commit_artifact`` loop.
 
 The default cache root is per-user (uid-keyed, mode 0700, ownership
 verified before any read) — a world-writable shared tempdir would
@@ -148,8 +153,8 @@ def commit_artifact(path: str, write) -> None:
     ``_SUCCESS`` marker), ``write(tmp)`` fills a process-unique temp
     dir — ending with ``_SUCCESS`` — which is then renamed into place
     (see the module note's write protocol). The one commit loop for
-    every artifact: ``persisted``'s frames and ``io.load_table``'s
-    split copies."""
+    every artifact: ``persisted``'s frames, ``io.load_table``'s split
+    copies and ``write_replay_source``'s replay layouts."""
     if os.path.isfile(os.path.join(path, "_SUCCESS")):
         return
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"

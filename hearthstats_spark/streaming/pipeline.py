@@ -9,9 +9,14 @@ delivery correctness is asserted in tests/test_streaming.py by
 replaying events across micro-batches (FIXTURES.md §streaming).
 
 Design:
-- The source directory is written file-per-micro-batch partitioned by
+- The source directory is file-per-micro-batch partitioned by
   ``event_id % 5`` so event time arrives out of order across batches
-  (a real replay, not a single sorted file).
+  (a real replay, not a single sorted file). Each layout is written
+  once per events fingerprint into the artifact store, and each call
+  reads a fresh directory of hard links to those files; a served
+  file shares the committed inode and its mtime sets the delivery
+  order, so ops may only rename, add or unlink directory entries,
+  never write to a file (``write_replay_source``).
 - ``Trigger.AvailableNow`` drains the source then stops — the batch
   equivalence property (final state == batch answer) is exact; s07
   runs the same pipeline under a ``ProcessingTime`` trigger (the
@@ -32,6 +37,7 @@ per (window × key) thanks to partial aggregation, exactly like batch.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import shutil
@@ -42,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hearthstats_spark.io import load_table
+from hearthstats_spark.operators import ann_index
 from hearthstats_spark.queries.registry import register
 
 DEC = "decimal(28,4)"
@@ -50,30 +57,56 @@ DEC = "decimal(28,4)"
 def write_replay_source(spark: SparkSession, sf_dir: str,
                         duplicate: bool = False,
                         time_ordered: bool = False) -> tuple[str, DataFrame]:
-    """Materialize events as a 5-file replay directory. Default split
-    is ``event_id % 5`` → event-time disorder ACROSS files (the
+    """Serve events as a 5-file replay directory. Default split is
+    ``event_id % 5`` → event-time disorder ACROSS files (the
     watermark-stress replay for aggregations, which tolerate late
     updates in `update` mode). ``time_ordered=True`` splits by 6-day
     ts ranges instead — files arrive in event-time order with only
     intra-file disorder, the delivery profile stream-stream joins
     need (append-mode state eviction drops truly-late rows). With
-    ``duplicate=True`` every file is written twice (dedup input)."""
+    ``duplicate=True`` every file is linked twice (dedup input).
+
+    Each layout is written once per events fingerprint into the
+    artifact store (``ann_index.commit_artifact``); every call gets a
+    fresh directory of hard links ``part_{i}_{r}_{n}.parquet`` to the
+    committed files, so a second call submits no Spark job. The caller
+    owns its directory and may rename, add or unlink entries (s14
+    moves files out and back, s13 links in a late file) but must never
+    write to or ``os.utime`` a served file: it shares its inode with
+    the committed one, so the change would reach every later call, and
+    the file source delivers files in mtime order, which is the
+    build's write order. Across filesystems (``EXDEV``) the files are
+    copied with their mtimes. With ``SPARK_GRAFT_ANN_CACHE=0`` the
+    same build writes into the per-call directory instead."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="hs_stream_src_")
-    for i in range(5):
-        if time_ordered:
-            chunk = ev.filter(
-                ((F.dayofmonth("ts") - 1) / 6).cast("int") == i)
-        else:
-            chunk = ev.filter(F.col("event_id") % 5 == i)
-        chunk.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(base, f"batch_{i}")
-        )
+
+    def build(out: str) -> None:
+        for i in range(5):
+            if time_ordered:
+                chunk = ev.filter(
+                    ((F.dayofmonth("ts") - 1) / 6).cast("int") == i)
+            else:
+                chunk = ev.filter(F.col("event_id") % 5 == i)
+            chunk.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(out, f"batch_{i}")
+            )
+        # the store's commit marker; Spark writes one per batch_i only
+        open(os.path.join(out, "_SUCCESS"), "w").close()
+
+    if ann_index.cache_enabled():
+        layout = "time_ordered" if time_ordered else "event_id_mod5"
+        base = ann_index.artifact_path(sf_dir, f"replay_{layout}",
+                                       table="events")
+        ann_index.commit_artifact(base, build)
+        flat = tempfile.mkdtemp(prefix="hs_stream_src_")
+    else:
+        base = tempfile.mkdtemp(prefix="hs_stream_src_")
+        build(base)
+        flat = os.path.join(base, "flat")
+        os.makedirs(flat)
     # flatten into one dir of files (file source watches one dir)
-    flat = os.path.join(base, "flat")
-    os.makedirs(flat, exist_ok=True)
     n = 0
     for i in range(5):
         d = os.path.join(base, f"batch_{i}")
@@ -81,10 +114,22 @@ def write_replay_source(spark: SparkSession, sf_dir: str,
             if f.endswith(".parquet"):
                 reps = 2 if duplicate else 1
                 for r in range(reps):
-                    os.link(os.path.join(d, f),
-                            os.path.join(flat, f"part_{i}_{r}_{n}.parquet"))
+                    _link_or_copy(os.path.join(d, f), os.path.join(
+                        flat, f"part_{i}_{r}_{n}.parquet"))
                     n += 1
     return flat, ev
+
+
+def _link_or_copy(src: str, dst: str) -> None:
+    """Hard-link ``src`` to ``dst``; copy it with its mtime when the
+    two sit on different filesystems (an operator-set
+    ``SPARK_GRAFT_ANN_CACHE_DIR`` elsewhere)."""
+    try:
+        os.link(src, dst)
+    except OSError as e:
+        if e.errno != errno.EXDEV:
+            raise
+        shutil.copy2(src, dst)
 
 
 _MEM_SINK_SEQ = [0]  # memory-sink table names must be session-unique

@@ -17,14 +17,6 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.fixture()
-def cache_dir(tmp_path, monkeypatch):
-    d = str(tmp_path / "ann_cache")
-    monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE_DIR", d)
-    monkeypatch.delenv("SPARK_GRAFT_ANN_CACHE", raising=False)
-    return d
-
-
 def test_readback_equals_retrain(spark, registry, cache_dir, monkeypatch):
     """q183 through a cold cache (trains + persists), through the warm
     cache (pure read-back), and with the cache disabled (the original

@@ -11,56 +11,14 @@ from __future__ import annotations
 import hashlib
 import os
 import shutil
-import time
-import uuid
 from urllib.parse import urlparse
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-import pytest
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_of
 
 SF_LARGE = os.path.join(os.path.dirname(SF_SMALL), "sf0.1")
-
-
-@pytest.fixture
-def cache_dir(tmp_path, monkeypatch):
-    d = str(tmp_path / "artifacts")
-    monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE_DIR", d)
-    monkeypatch.delenv("SPARK_GRAFT_ANN_CACHE", raising=False)
-    return d
-
-
-def _jobs_of(spark, fn) -> list:
-    """Run ``fn`` under a fresh job group; return the group's jobs as
-    (job id, max tasks of one stage). The status tracker is fed by the
-    asynchronous, in-order listener bus, so a marker job submitted
-    afterwards is awaited first: once it is visible, so is every job
-    ``fn`` submitted."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def in_group(group, body):
-        sc.setJobGroup(group, group)
-        try:
-            return body()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-
-    group = f"test-io-{uuid.uuid4().hex[:8]}"
-    in_group(group, fn)
-    in_group(f"{group}-marker", lambda: sc.parallelize([0], 1).count())
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(f"{group}-marker"):
-        assert time.time() < deadline, "marker job never became visible"
-        time.sleep(0.05)
-    out = []
-    for jid in tracker.getJobIdsForGroup(group):
-        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(jid).stageIds]
-        out.append((jid, max(s.numTasks for s in stages if s is not None)))
-    return out
 
 
 def _local_files(df) -> list[str]:
@@ -79,10 +37,10 @@ def test_second_load_runs_no_spark_job(spark):
 
     session = spark.newSession()  # nothing resolved in it yet
     for name in ("lineitem", "events"):
-        first = _jobs_of(session, lambda: load_table(session, SF_SMALL, name))
+        first = jobs_of(session, lambda: load_table(session, SF_SMALL, name))
         assert first, f"{name}: first load should infer with a job"
         frames = []
-        again = _jobs_of(session, lambda: frames.append(
+        again = jobs_of(session, lambda: frames.append(
             load_table(session, SF_SMALL, name)))
         assert again == [], f"{name}: second load ran jobs {again}"
         # a new relation per call: same schema, and events.ts still
@@ -104,10 +62,10 @@ def test_second_persisted_read_runs_no_spark_job(spark, cache_dir):
         return session.range(5).selectExpr("id", "id * 2 AS twice")
 
     frames = []
-    first = _jobs_of(session, lambda: frames.append(
+    first = jobs_of(session, lambda: frames.append(
         persisted(session, SF_SMALL, "io_probe", build)))
     assert first, "first persisted call should build and infer with jobs"
-    again = _jobs_of(session, lambda: frames.append(
+    again = jobs_of(session, lambda: frames.append(
         persisted(session, SF_SMALL, "io_probe", build)))
     assert again == [], f"second persisted read ran jobs {again}"
     assert frames[0].schema == frames[1].schema
@@ -149,7 +107,7 @@ def test_large_file_split_copy_matches_source(spark, cache_dir):
 
     assert digest(df) == digest(orig)
 
-    scans = _jobs_of(spark, lambda: df.agg(F.sum("l_quantity")).collect())
+    scans = jobs_of(spark, lambda: df.agg(F.sum("l_quantity")).collect())
     assert max(tasks for _, tasks in scans) > 1, scans
 
 

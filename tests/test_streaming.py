@@ -5,10 +5,15 @@ answer exactly, and doubled delivery must dedup to the original set."""
 
 from __future__ import annotations
 
+import errno
+import os
+import tempfile
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_of
 
 
 def _hourly_batch_answer(spark):
@@ -158,10 +163,13 @@ def test_checkpoint_restart_exactly_once(spark, registry):
     phase-1 state (final answer == batch over ALL files) while its
     phase-2 input is ONLY the two newly-arrived files — the offset
     log forbids re-delivery."""
+    rows = registry["s14_checkpoint_restart"].fn(spark, SF_SMALL).collect()
+    _assert_s14_exactly_once(spark, rows)
+
+
+def _assert_s14_exactly_once(spark, rows):
     from hearthstats_spark.io import load_table
 
-    out = registry["s14_checkpoint_restart"].fn(spark, SF_SMALL)
-    rows = out.collect()
     assert rows, "s14 produced no state"
     got = {(r["hour_start"], r["event_type"]): (r["n"], r["total_value"])
            for r in rows}
@@ -171,6 +179,91 @@ def test_checkpoint_restart_exactly_once(spark, registry):
     late_files_rows = ev.filter(
         ((F.dayofmonth("ts") - 1) / 6).cast("int") >= 3).count()
     assert rows[0]["phase2_input_rows"] == late_files_rows
+
+
+@pytest.fixture
+def replay_store(cache_dir, tmp_path, monkeypatch):
+    """A private artifact store for the replay layouts, with every
+    per-call directory under ``tmp_path``."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    monkeypatch.delenv("SPARK_GRAFT_ANN_FPMODE", raising=False)
+    return cache_dir
+
+
+def _served(src):
+    """A replay directory's (file name, row count) pairs in the file
+    source's delivery order: by mtime, then name."""
+    names = sorted(os.listdir(src), key=lambda f: (
+        os.stat(os.path.join(src, f)).st_mtime_ns, f))
+    return [(f, pq.read_metadata(os.path.join(src, f)).num_rows)
+            for f in names]
+
+
+@pytest.mark.parametrize("time_ordered", [False, True])
+def test_second_replay_source_call_runs_no_spark_job(
+        spark, replay_store, time_ordered):
+    """Each replay layout is written once per events fingerprint: the
+    first call in a fresh store builds it with Spark jobs, a second
+    call only links the committed files and submits none."""
+    from hearthstats_spark.streaming.pipeline import write_replay_source
+
+    def call(out):
+        out.append(write_replay_source(
+            spark, SF_SMALL, time_ordered=time_ordered)[0])
+
+    first, again = [], []
+    assert jobs_of(spark, lambda: call(first)), "cold call should build"
+    assert jobs_of(spark, lambda: call(again)) == []
+    assert first[0] != again[0]  # a directory of its own per call
+    assert _served(again[0]) == _served(first[0])
+    assert len(_served(again[0])) == 5
+
+
+def test_ops_never_touch_committed_replay_files(spark, registry,
+                                                 replay_store):
+    """s13 links a late file into its replay directory and s14 moves
+    files out and back: neither may change a committed file (relpath,
+    size, mtime_ns), and s14's exactly-once accounting must still hold
+    on a third call served from the same store."""
+    from hearthstats_spark.operators.ann_index import source_fingerprint
+    from hearthstats_spark.streaming.pipeline import write_replay_source
+
+    for time_ordered in (False, True):
+        write_replay_source(spark, SF_SMALL, time_ordered=time_ordered)
+    before = source_fingerprint(replay_store)
+    assert before.count(".parquet:") == 10  # both layouts committed
+    registry["s13_watermark_late_drop"].fn(spark, SF_SMALL).collect()
+    registry["s14_checkpoint_restart"].fn(spark, SF_SMALL).collect()
+    rows = registry["s14_checkpoint_restart"].fn(spark, SF_SMALL).collect()
+    assert source_fingerprint(replay_store) == before
+    _assert_s14_exactly_once(spark, rows)
+
+
+@pytest.mark.parametrize("lane", ["cache_off", "cross_device_copy"])
+def test_replay_lanes_serve_the_same_files(spark, replay_store,
+                                           monkeypatch, lane):
+    """With the store disabled (``SPARK_GRAFT_ANN_CACHE=0``: the build
+    writes into the per-call directory), and when hard links fail with
+    ``EXDEV`` (the files are copied with their mtimes), every layout
+    serves the same file names in the same delivery order with the
+    same per-file row counts as the linked store."""
+    from hearthstats_spark.streaming.pipeline import write_replay_source
+
+    layouts = ({}, {"time_ordered": True}, {"duplicate": True})
+    linked = [_served(write_replay_source(spark, SF_SMALL, **kw)[0])
+              for kw in layouts]
+    if lane == "cache_off":
+        monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE", "0")
+    else:
+        def no_link(src, dst):
+            raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), src)
+        monkeypatch.setattr(os, "link", no_link)
+    other = [_served(write_replay_source(spark, SF_SMALL, **kw)[0])
+             for kw in layouts]
+    assert other == linked
+    assert [len(files) for files in linked] == [5, 5, 10]
 
 
 def test_stream_session_window_equals_batch(spark, registry):
