@@ -52,7 +52,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructType, TimestampType
 
 from hearthstats_spark.operators import ann_index
 from hearthstats_spark.session import ensure_conf
@@ -117,8 +117,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _drop_partition_cols(_read_parquet(spark, sf_dir, name))
 
 
-#: per session: (read key) -> (inferred schema, row groups of the
-#: split copy or 0 to read in place). A table's key is (source path,
+#: per session: (read key) -> (inferred schema, files of the split
+#: copy or 0 to read in place). A table's key is (source path,
 #: source fingerprint); an artifact's is (artifact path, "").
 _RESOLVED: weakref.WeakKeyDictionary[
     SparkSession, dict[tuple[str, str], tuple[StructType, int]]
@@ -133,11 +133,11 @@ def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     src = os.path.join(sf_dir, f"{name}.parquet")
     key = (src, ann_index.source_fingerprint(src))
     hit = _RESOLVED.get(spark, {}).get(key)
-    groups = hit[1] if hit else _split_groups(spark, src)
+    files = hit[1] if hit else _split_files(spark, src)
     path = src
-    if groups and ann_index.cache_enabled():
-        path = _split_copy(sf_dir, name, groups)
-    return _read_resolved(spark, key, path, groups)
+    if files and ann_index.cache_enabled():
+        path = _split_copy(sf_dir, name, files)
+    return _read_resolved(spark, key, path, files)
 
 
 def read_artifact(spark: SparkSession, path: str) -> DataFrame:
@@ -149,24 +149,24 @@ def read_artifact(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _read_resolved(spark: SparkSession, key: tuple[str, str], path: str,
-                   groups: int) -> DataFrame:
+                   files: int) -> DataFrame:
     """``path`` read with the schema remembered under ``key`` in this
     session; the first read infers it (one Spark job) and records it
-    with ``groups``."""
+    with ``files``."""
     resolved = _RESOLVED.setdefault(spark, {})
     hit = resolved.get(key)
     if hit is not None:
         return spark.read.schema(hit[0]).parquet(path)
     df = spark.read.parquet(path)
-    resolved[key] = (df.schema, groups)
+    resolved[key] = (df.schema, files)
     return df
 
 
-def _split_groups(spark: SparkSession, src: str) -> int:
-    """Row groups for a split copy of ``src``, or 0 to read it in
-    place. A file no larger than ``openCostInBytes`` is never split
-    by Spark (maxSplitBytes is at least openCostInBytes), and one
-    with ``defaultParallelism`` row groups already fills the cores."""
+def _split_files(spark: SparkSession, src: str) -> int:
+    """Files for a split copy of ``src``, or 0 to read it in place.
+    A file no larger than ``openCostInBytes`` is never split by Spark
+    (maxSplitBytes is at least openCostInBytes), and one with
+    ``defaultParallelism`` row groups already fills the cores."""
     if not os.path.isfile(src):
         return 0
     open_cost = spark._jsparkSession.sessionState().conf() \
@@ -178,29 +178,75 @@ def _split_groups(spark: SparkSession, src: str) -> int:
     cores = spark.sparkContext.defaultParallelism
     if pq.read_metadata(src).num_row_groups >= cores:
         return 0
-    return 2 * cores
+    return cores
 
 
-def _split_copy(sf_dir: str, name: str, groups: int) -> str:
-    """Path of ``name``'s copy with about ``groups`` row groups,
-    written with pyarrow and committed once per source fingerprint."""
+def _split_copy(sf_dir: str, name: str, files: int) -> str:
+    """Path of ``name``'s copy: a ``<name>.parquet`` directory of
+    ``files`` equal files of one row group each, written with pyarrow
+    and committed once per source fingerprint."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, f"{name}.parquet")
-    art = ann_index.artifact_path(sf_dir, f"split_{name}_rg{groups}",
+    art = ann_index.artifact_path(sf_dir, f"split_{name}_files{files}",
                                   table=name)
 
     def write(tmp: str) -> None:
-        os.makedirs(tmp)
-        with pq.ParquetFile(src) as pf, pq.ParquetWriter(
-                os.path.join(tmp, f"{name}.parquet"), pf.schema_arrow) as out:
-            rows = -(-pf.metadata.num_rows // groups)  # ceil
+        out = os.path.join(tmp, f"{name}.parquet")
+        os.makedirs(out)
+        with pq.ParquetFile(src) as pf:
+            rows = -(-pf.metadata.num_rows // files)  # ceil
+            held: list[pa.RecordBatch] = []
+            n_held = part = 0
+
+            def flush(table: pa.Table) -> None:
+                nonlocal part
+                pq.write_table(table, os.path.join(
+                    out, f"part-{part:05d}.parquet"), row_group_size=rows)
+                part += 1
+
             for batch in pf.iter_batches(batch_size=rows):
-                out.write_batch(batch, row_group_size=rows)
+                held.append(batch)
+                n_held += batch.num_rows
+                if n_held >= rows:
+                    table = pa.Table.from_batches(held, pf.schema_arrow)
+                    flush(table.slice(0, rows))
+                    held = table.slice(rows).to_batches()
+                    n_held -= rows
+            if n_held:
+                flush(pa.Table.from_batches(held, pf.schema_arrow))
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     ann_index.commit_artifact(art, write)
     return os.path.join(art, f"{name}.parquet")
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str
+                ) -> DataFrame:
+    """``rows`` (tuples or Rows, positional) as a DataFrame with
+    ``schema`` (a StructType or a DDL string), built as an Arrow
+    table: Spark plans it as a ``LocalRelation``, so ``collect()``
+    runs no Spark job and a join reads it without a Python worker.
+    Values, schema and a naive datetime's meaning (Python-local time)
+    are those of ``spark.createDataFrame(rows, schema)``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = []
+    for i, field in enumerate(schema.fields):
+        values = [row[i] for row in rows]
+        if isinstance(field.dataType, TimestampType):
+            # epoch microseconds by the list path's own rule (naive is
+            # local time, DST gaps and folds included): Arrow would
+            # read a naive datetime as UTC
+            values = [field.dataType.toInternal(v) for v in values]
+        columns.append(pa.array(values, type=arrow.field(i).type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow), schema)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:

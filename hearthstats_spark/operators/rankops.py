@@ -60,6 +60,8 @@ def with_global_position(
     it only costs balance, never correctness). Plan: one boundary
     pass, one tiny count aggregate, then a single per-bucket sort —
     every window partitions by a real key."""
+    from hearthstats_spark.io import local_frame  # io imports operators
+
     b = _range_bucketed(df, order_col, n_buckets, boundaries)
     counts = {r["__b"]: r["cnt"] for r in
               b.groupBy("__b").agg(F.count(F.lit(1)).alias("cnt")).collect()}
@@ -68,7 +70,7 @@ def with_global_position(
     for bk in sorted(counts):
         offsets.append((bk, acc))
         acc += counts[bk]
-    off = df.sparkSession.createDataFrame(offsets, "__b int, __off long")
+    off = local_frame(df.sparkSession, offsets, "__b int, __off long")
     w = Window.partitionBy("__b").orderBy(order_col, *tiebreak)
     out = (
         b.join(F.broadcast(off), "__b")
@@ -131,6 +133,8 @@ def with_global_prefix_sums(
         cum_cols = [f"__cum_{m}" for m in measures]
     if len(cum_cols) != len(measures):
         raise ValueError("cum_cols must match measures 1:1")
+    from hearthstats_spark.io import local_frame  # io imports operators
+
     b = _range_bucketed(df, order_col, n_buckets, boundaries)
     rows = b.groupBy("__b").agg(
         *[F.sum(m).alias(f"__s{i}") for i, m in enumerate(measures)]
@@ -144,7 +148,8 @@ def with_global_prefix_sums(
         offsets.append((bk, *acc))
         acc = [a + s for a, s in zip(acc, sums[bk])]
     off_cols = [f"__off{i}" for i in range(len(measures))]
-    off = df.sparkSession.createDataFrame(
+    off = local_frame(
+        df.sparkSession,
         offsets, "__b int, " + ", ".join(f"{c} long" for c in off_cols))
     w = (Window.partitionBy("__b").orderBy(order_col, *tiebreak)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -175,6 +180,8 @@ def with_global_running_max(
     range-partitioned shape as :func:`with_global_position`: per-bucket
     window max + a ≤ ``n_buckets``-row bucket-max frame whose prefix
     max broadcasts back. No global single-task sort."""
+    from hearthstats_spark.io import local_frame  # io imports operators
+
     b = _range_bucketed(df, order_col, n_buckets, "quantile")
     bucket_max = {r["__b"]: r["m"] for r in
                   b.groupBy("__b").agg(F.max(measure).alias("m")).collect()}
@@ -183,7 +190,8 @@ def with_global_running_max(
         prefixes.append((bk, acc))
         acc = bucket_max[bk] if acc is None else max(acc, bucket_max[bk])
     mtype = df.schema[measure].dataType.simpleString()
-    off = df.sparkSession.createDataFrame(
+    off = local_frame(
+        df.sparkSession,
         prefixes, f"__b int, __pmax {mtype}")
     upper = -1 if strict else Window.currentRow
     w = (Window.partitionBy("__b").orderBy(order_col)

@@ -62,6 +62,8 @@ def chunked_topk_pairs(df: DataFrame, id_col: str, vec_col: str,
     import numpy as np
     import pandas as pd
 
+    from hearthstats_spark.io import local_frame  # io imports operators
+
     spark = df.sparkSession
     n = df.count()  # scalar metadata action (sizes B), not a collect
     # parallelism floor: even when everything fits one chunk, split to
@@ -83,7 +85,8 @@ def chunked_topk_pairs(df: DataFrame, id_col: str, vec_col: str,
                            "vec_id", "embedding", F.lit(0).alias("__side"))
         side_a, side_b = rows, None
     else:
-        tasks = spark.createDataFrame(
+        tasks = local_frame(
+            spark,
             [(a, b) for a in range(n_chunks) for b in range(a, n_chunks)],
             "ca int, cb int",
         )

@@ -21,7 +21,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hearthstats_spark.io import load_table
+from hearthstats_spark.io import load_table, local_frame
 from hearthstats_spark.queries.registry import register
 
 
@@ -33,21 +33,31 @@ def s01_jdbc_sqlite_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hearthstats_spark.queries.joins import q14_join_cross
 
     result = q14_join_cross(spark, sf_dir)
-    db = os.path.join(tempfile.mkdtemp(prefix="hs_sqlite_"), "hearthstats.db")
-    url = f"jdbc:sqlite:{db}"
+    base = tempfile.mkdtemp(prefix="hs_sqlite_")
+    db = os.path.join(base, "hearthstats.db")
     sink = "jdbc"
     try:
-        (result.write.format("jdbc").option("url", url)
-         .option("dbtable", "region_nation").mode("overwrite").save())
-    except Exception:
-        sink = "sqlite3_fallback"  # no sqlite-jdbc jar offline (SURVEY §7.10)
-        pdf = result.toPandas()
+        try:
+            (result.write.format("jdbc").option("url", f"jdbc:sqlite:{db}")
+             .option("dbtable", "region_nation").mode("overwrite").save())
+        except Exception:
+            sink = "sqlite3_fallback"  # no sqlite-jdbc jar offline (SURVEY §7.10)
+            pdf = result.toPandas()
+            n_written = len(pdf)  # the rows it wrote, no second q14 run
+            with sqlite3.connect(db) as con:
+                pdf.to_sql("region_nation", con, index=False,
+                           if_exists="replace")
+        else:
+            n_written = result.count()
         with sqlite3.connect(db) as con:
-            pdf.to_sql("region_nation", con, index=False, if_exists="replace")
-    with sqlite3.connect(db) as con:
-        n_back = con.execute("SELECT COUNT(*) FROM region_nation").fetchone()[0]
-    return spark.createDataFrame(
-        [(sink, result.count(), n_back)],
+            n_back = con.execute(
+                "SELECT COUNT(*) FROM region_nation").fetchone()[0]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    # the summary row is a local relation: it reads nothing under base
+    return local_frame(
+        spark,
+        [(sink, n_written, n_back)],
         "sink string, n_written long, n_readback long",
     )
 
@@ -61,29 +71,31 @@ def s02_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     base = tempfile.mkdtemp(prefix="hs_roundtrip_")
     csv_dir, json_dir = os.path.join(base, "csv"), os.path.join(base, "json")
+    try:
+        nation.write.mode("overwrite").option("header", True).csv(csv_dir)
+        nation.write.mode("overwrite").json(json_dir)
 
-    nation.write.mode("overwrite").option("header", True).csv(csv_dir)
-    nation.write.mode("overwrite").json(json_dir)
+        csv_back = (spark.read.option("header", True)
+                    .schema(nation.schema).csv(csv_dir))
+        json_back = spark.read.schema(nation.schema).json(json_dir)
 
-    csv_back = (
-        spark.read.option("header", True).schema(nation.schema).csv(csv_dir)
-    )
-    json_back = spark.read.schema(nation.schema).json(json_dir)
+        def matches(back: DataFrame) -> bool:
+            return (
+                back.count() == nation.count()
+                and back.exceptAll(nation).count() == 0
+                and nation.exceptAll(back).count() == 0
+            )
 
-    def matches(back: DataFrame) -> bool:
-        return (
-            back.count() == nation.count()
-            and back.exceptAll(nation).count() == 0
-            and nation.exceptAll(back).count() == 0
+        return local_frame(
+            spark,
+            [
+                ("csv", csv_back.count(), bool(matches(csv_back))),
+                ("json", json_back.count(), bool(matches(json_back))),
+            ],
+            "fmt string, n_rows long, roundtrip_ok boolean",
         )
-
-    return spark.createDataFrame(
-        [
-            ("csv", csv_back.count(), bool(matches(csv_back))),
-            ("json", json_back.count(), bool(matches(json_back))),
-        ],
-        "fmt string, n_rows long, roundtrip_ok boolean",
-    )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 @register("s08_orc_avro_roundtrip", oracle=None)  # rows-only: side-effect op
@@ -97,29 +109,32 @@ def s08_orc_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     base = tempfile.mkdtemp(prefix="hs_orc_")
     orc_dir = os.path.join(base, "orc")
-
-    nation.write.mode("overwrite").orc(orc_dir)
-    orc_back = spark.read.schema(nation.schema).orc(orc_dir)
-    orc_ok = (
-        orc_back.count() == nation.count()
-        and orc_back.exceptAll(nation).count() == 0
-        and nation.exceptAll(orc_back).count() == 0
-    )
-
-    avro_state = "avro_ok"
     try:
-        avro_dir = os.path.join(base, "avro")
-        nation.write.mode("overwrite").format("avro").save(avro_dir)
-        a_back = spark.read.format("avro").load(avro_dir)
-        if a_back.count() != nation.count():
-            avro_state = "avro_mismatch"
-    except Exception:
-        avro_state = "avro_unavailable"  # external spark-avro jar absent
+        nation.write.mode("overwrite").orc(orc_dir)
+        orc_back = spark.read.schema(nation.schema).orc(orc_dir)
+        orc_ok = (
+            orc_back.count() == nation.count()
+            and orc_back.exceptAll(nation).count() == 0
+            and nation.exceptAll(orc_back).count() == 0
+        )
 
-    return spark.createDataFrame(
-        [("orc", nation.count(), bool(orc_ok), avro_state)],
-        "fmt string, n_rows long, roundtrip_ok boolean, avro string",
-    )
+        avro_state = "avro_ok"
+        try:
+            avro_dir = os.path.join(base, "avro")
+            nation.write.mode("overwrite").format("avro").save(avro_dir)
+            a_back = spark.read.format("avro").load(avro_dir)
+            if a_back.count() != nation.count():
+                avro_state = "avro_mismatch"
+        except Exception:
+            avro_state = "avro_unavailable"  # external spark-avro jar absent
+
+        return local_frame(
+            spark,
+            [("orc", nation.count(), bool(orc_ok), avro_state)],
+            "fmt string, n_rows long, roundtrip_ok boolean, avro string",
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 @register("s10_partitioned_layout", oracle=None)  # rows-only: side-effect op
@@ -169,7 +184,8 @@ def s10_partitioned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_f_zeroed = after.filter((F.col("o_orderstatus") == "F")
                               & (F.col("o_totalprice") == 0.0)).count()
     n_o_after = after.filter(F.col("o_orderstatus") == "O").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(3, bool(pruning_pushed), n_f_before, n_f_zeroed,
           bool(n_o_after == n_o_before),
           bool(after.count() == o.count()))],
@@ -211,7 +227,8 @@ def s09_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty target (a first load, or the degenerate-corpus audit):
     # max over zero rows is NULL — inserts start from key 0
     max_key = target.agg(F.max("c_custkey")).collect()[0][0] or 0
-    inserts = spark.createDataFrame(
+    inserts = local_frame(
+        spark,
         [(max_key + i, f"NewCustomer#{i}", 1, 100.0 * i)
          for i in range(1, 6)],
         "c_custkey long, c_name string, c_nationkey long, c_acctbal double",
@@ -236,7 +253,8 @@ def s09_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged.write.mode("overwrite").parquet(merged_dir)
 
     after = spark.read.parquet(merged_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             target.count(), updates.count(), inserts.count(), after.count(),
             after.filter((F.col("c_nationkey") == 1)
@@ -296,7 +314,8 @@ def s12_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     after = spark.read.parquet(compacted)
     files_after = len(data_files(compacted))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(files_before, files_after, int(n_out),
           bool(after.count() == ev.count()),
           bool(digest(after) == digest_before))],
@@ -396,13 +415,14 @@ def s18_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     if kept:
         pruned = spark.read.parquet(*kept).filter(pred)
     else:
-        pruned = spark.createDataFrame([], df.schema)
+        pruned = local_frame(spark, [], df.schema)
     full = df.filter(pred)
     only_pruned = pruned.exceptAll(full)
     only_full = full.exceptAll(pruned)
     try:
         counters = (
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(int(n_files), len(kept))],
                 "n_files_total long, n_files_kept long")
             .crossJoin(pruned.agg(F.count(F.lit(1)).alias("n_rows_pruned")))
@@ -414,7 +434,7 @@ def s18_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before cleanup: the returned frame must not
         # depend on the about-to-be-deleted temp layout
         rows = counters.collect()
-        return spark.createDataFrame(rows, counters.schema)
+        return local_frame(spark, rows, counters.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -486,7 +506,8 @@ def s20_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cache())
         n_drop = dropped.count()
         n_clean = n.count()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(n_total, n_clean, len(bad_lines), n_corrupt,
               n_good_perm, n_drop,
               bool(n_good_perm == n_drop == n_clean
@@ -555,7 +576,8 @@ def s21_binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         got = {r["path"]: (r["length"], r["digest"])
                for r in bf.collect()}  # n_files rows (metadata-sized)
         n_ok = sum(1 for k, v in truth.items() if got.get(k) == v)
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(len(truth), len(got), n_ok,
               bool(not any(k.endswith(".skipme") for k in got)),
               bool(got == truth))],

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hearthstats_spark.io import load_table
+from hearthstats_spark.io import load_table, local_frame
 from hearthstats_spark.operators.bounded import broadcast_bounded
 from hearthstats_spark.operators.rankops import (
     with_global_prefix_sum, with_global_prefix_sums,
@@ -339,7 +339,8 @@ def bpe_train(vocab: DataFrame, n_merges: int):
     # schema-stable also when zero merges were possible (a vocabulary
     # of single-symbol words): same shape the oracle's all-empty
     # best{i} union produces
-    merges = vocab.sparkSession.createDataFrame(
+    merges = local_frame(
+        vocab.sparkSession,
         rows, "rk int, pair string, pair_count bigint")
     return merges, sym
 

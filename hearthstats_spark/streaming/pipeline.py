@@ -47,7 +47,7 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hearthstats_spark.io import load_table
+from hearthstats_spark.io import load_table, local_frame
 from hearthstats_spark.operators import ann_index
 from hearthstats_spark.queries.registry import register
 
@@ -266,7 +266,8 @@ def s06_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "v_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"))
         .count()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_stream_pairs, batch_pairs)],
         "n_stream_pairs long, n_batch_pairs long",
     )
@@ -374,7 +375,8 @@ def s04_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     n_after = spark.read.parquet(out).distinct().count()
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(2 * n_expected, n_after, n_expected)],
         "n_delivered long, n_after_dedup long, n_expected long",
     )
@@ -783,7 +785,8 @@ def s17_stream_foreachbatch_merge(spark: SparkSession,
     try:
         counters = (
             final.agg(F.count(F.lit(1)).alias("n_users_merged"))
-            .crossJoin(spark.createDataFrame(
+            .crossJoin(local_frame(
+                spark,
                 [(state["n_batches"],)], "n_batches long"))
             .crossJoin(only_stream.agg(
                 F.count(F.lit(1)).alias("n_only_stream")))
@@ -791,7 +794,7 @@ def s17_stream_foreachbatch_merge(spark: SparkSession,
                 F.count(F.lit(1)).alias("n_only_batch")))
         )
         rows = counters.collect()  # materialize before temp cleanup
-        return spark.createDataFrame(rows, counters.schema)
+        return local_frame(spark, rows, counters.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -846,7 +849,8 @@ def s19_stream_stream_left_outer(spark: SparkSession,
     for k in (1, 2):
         sentinel_dir = tempfile.mkdtemp(prefix="hs_s19_sentinel_")
         sent_ts = max_ts + timedelta(hours=100 * k)
-        (spark.createDataFrame(
+        (local_frame(
+            spark,
             [(-(2 * k), sent_ts, -1, "purchase", 0.0),
              (-(2 * k + 1), sent_ts, -2, "view", 0.0)],
             ev.schema)
@@ -905,7 +909,8 @@ def s19_stream_stream_left_outer(spark: SparkSession,
         "left_outer")
     n_batch_matched = batch.filter(F.col("v_id").isNotNull()).count()
     n_batch_unmatched = batch.filter(F.col("v_id").isNull()).count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_stream_matched, n_batch_matched,
           n_stream_unmatched, n_batch_unmatched)],
         "n_stream_matched long, n_batch_matched long, "
@@ -1471,7 +1476,8 @@ def _streaming_dedup_impl(spark: SparkSession, sf_dir: str,
         n_index1 = spark.read.schema(_sig_schema()).parquet(
             *_index_paths(idx_base, counters["batches"])).count()
         n_batch_docs = batch_docs.count()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(counters["batches"], counters["seen"], counters["kept"],
               counters["dropped"], n_index0, n_index1,
               bool(counters["seen"] == n_batch_docs
@@ -1577,7 +1583,8 @@ def s24_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_stream_rows = streamed.count()
         n_batch_rows = batch_ans.count()
         n_queries = streamed.select("query_id").distinct().count()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(n_queries, n_stream_rows, n_batch_rows, n_mismatch,
               bool(n_mismatch == 0 and n_stream_rows == n_batch_rows
                    and n_queries == _N_STREAM_Q))],
@@ -1700,7 +1707,8 @@ def s25_stream_index_compaction(spark: SparkSession,
             | (F.col("na") != F.col("nb"))
             | (F.col("ka") != F.col("kb"))).count()
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(n_layers, rows_layered, rows_out1, a[0], a[1], n_mismatch,
               idempotent,
               bool(rows_layered == rows_out1 and idempotent
@@ -1863,7 +1871,8 @@ def s26_stream_index_retention(spark: SparkSession,
             (F.col("nm_ttl") != F.col("nm_wof"))
             | (F.col("kept_ttl") != F.col("kept_wof"))).count()
 
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(_W, n_docs, n_mono_viol, n_rescued, n_early_mismatch,
               n_ttl_div,
               bool(n_docs > 0 and n_mono_viol == 0 and n_rescued > 0
@@ -1970,7 +1979,8 @@ def s27_stream_vocab_maintenance(spark: SparkSession,
 
         head_match = head_of(vocab_stream) == head_of(vocab_batch)
         n_words = vocab_stream.count()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(seen["batches"], n_words, n_mismatch, n_mono_viol,
               bool(head_match),
               bool(seen["batches"] == n_slices and n_words > 0

@@ -49,3 +49,19 @@ def test_rows_only_op_returns_rows(spark, name):
     assert _REG[name].oracle is None
     res = check_op(spark, None, SF_SMALL, _REG[name])
     assert res.n_spark >= 1, str(res)
+
+
+def test_one_shot_sinks_leave_no_scratch(spark, tmp_path, monkeypatch):
+    """Each one-shot sink returns a local relation that reads none of
+    its scratch files, so it removes its temp directory before it
+    returns: two runs in one session leave no ``hs_*`` directory and
+    give the same rows."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in UNTESTED_ROWS_ONLY:
+        runs = [sorted(_REG[name].fn(spark, SF_SMALL).collect())
+                for _ in range(2)]
+        assert runs[0] == runs[1], name
+        assert runs[0], name
+        assert not [p.name for p in tmp_path.glob("hs_*")], name
