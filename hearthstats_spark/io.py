@@ -26,18 +26,33 @@ artifacts back through the same memo (``read_artifact``).
 A large flat source is also read in a layout that uses every core.
 Spark splits a file scan into ``min(maxPartitionBytes,
 max(openCostInBytes, bytes / cores))``-byte pieces but never splits
-a parquet row group, so a one-row-group file scans as one task. When
-the source is one parquet file larger than ``openCostInBytes`` with
-fewer row groups than ``defaultParallelism``, ``load_table`` reads a
-copy instead: the same rows, values and schema, rewritten with
-pyarrow (no Spark job) into ``2 × defaultParallelism`` row groups.
-The copy lives in the artifact store (``operators/ann_index``: under
-``SPARK_GRAFT_ANN_CACHE_DIR`` or the per-user default root), keyed by
-the source fingerprint and the row-group target, committed through
-the store's rename protocol, and named ``<table>.parquet`` inside its
-directory so plans still name the table. Smaller files, directories
-and sessions with the artifact store disabled
+a parquet row group, so a one-row-group file scans as one task; a
+file of a few row groups still leaves cores idle, because each row
+group goes to the piece that holds its midpoint (a copy with
+``2 × cores`` row groups in one file gave four tasks 0, 150,000,
+225,000 and 225,000 rows). When the source is one parquet file
+larger than ``openCostInBytes`` with fewer row groups than
+``defaultParallelism``, ``load_table`` reads a copy instead: the same
+rows, values and schema, rewritten with pyarrow (no Spark job) as
+``defaultParallelism`` files of one equal row group each. Each file
+is below the split size (its bytes plus ``openCostInBytes``), and a
+second file never fits into a task with it, so every task reads one
+file. The copy lives in the artifact store (``operators/ann_index``:
+under ``SPARK_GRAFT_ANN_CACHE_DIR`` or the per-user default root),
+keyed by the source fingerprint and the file count, committed
+through the store's rename protocol, and is a directory named
+``<table>.parquet`` so plans still name the table. Smaller files,
+directories and sessions with the artifact store disabled
 (``SPARK_GRAFT_ANN_CACHE=0``) read the source in place.
+
+``local_frame`` turns rows the driver holds (an op's summary row, a
+small offset or task table) into a DataFrame. ``spark.createDataFrame``
+of a Python list plans a ``LogicalRDD`` whose data PySpark re-pickles
+through a Python-worker job on every action. ``local_frame`` builds a
+pyarrow table with the Arrow form of the Spark schema instead, which
+Spark plans as a ``LocalRelation``: ``collect()`` runs no Spark job,
+and a join or broadcast reads it without a Python worker. It is the
+engine's only ``createDataFrame`` call (a Tier-1 test holds that).
 
 At 100 TB these would be directory-partitioned datasets (orders and
 lineitem partitioned by month of their date column, events by day)

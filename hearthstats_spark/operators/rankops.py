@@ -149,8 +149,8 @@ def with_global_prefix_sums(
         acc = [a + s for a, s in zip(acc, sums[bk])]
     off_cols = [f"__off{i}" for i in range(len(measures))]
     off = local_frame(
-        df.sparkSession,
-        offsets, "__b int, " + ", ".join(f"{c} long" for c in off_cols))
+        df.sparkSession, offsets,
+        "__b int, " + ", ".join(f"{c} long" for c in off_cols))
     w = (Window.partitionBy("__b").orderBy(order_col, *tiebreak)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     out = b.join(F.broadcast(off), "__b").select(
@@ -190,9 +190,7 @@ def with_global_running_max(
         prefixes.append((bk, acc))
         acc = bucket_max[bk] if acc is None else max(acc, bucket_max[bk])
     mtype = df.schema[measure].dataType.simpleString()
-    off = local_frame(
-        df.sparkSession,
-        prefixes, f"__b int, __pmax {mtype}")
+    off = local_frame(df.sparkSession, prefixes, f"__b int, __pmax {mtype}")
     upper = -1 if strict else Window.currentRow
     w = (Window.partitionBy("__b").orderBy(order_col)
          .rowsBetween(Window.unboundedPreceding, upper))

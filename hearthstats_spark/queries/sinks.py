@@ -17,6 +17,7 @@ import os
 import shutil
 import sqlite3
 import tempfile
+from contextlib import closing
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,15 +42,16 @@ def s01_jdbc_sqlite_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             (result.write.format("jdbc").option("url", f"jdbc:sqlite:{db}")
              .option("dbtable", "region_nation").mode("overwrite").save())
         except Exception:
-            sink = "sqlite3_fallback"  # no sqlite-jdbc jar offline (SURVEY §7.10)
+            # no sqlite-jdbc jar offline (SURVEY §7.10)
+            sink = "sqlite3_fallback"
             pdf = result.toPandas()
             n_written = len(pdf)  # the rows it wrote, no second q14 run
-            with sqlite3.connect(db) as con:
+            with closing(sqlite3.connect(db)) as con:  # to_sql commits
                 pdf.to_sql("region_nation", con, index=False,
                            if_exists="replace")
         else:
             n_written = result.count()
-        with sqlite3.connect(db) as con:
+        with closing(sqlite3.connect(db)) as con:
             n_back = con.execute(
                 "SELECT COUNT(*) FROM region_nation").fetchone()[0]
     finally:

@@ -339,9 +339,8 @@ def bpe_train(vocab: DataFrame, n_merges: int):
     # schema-stable also when zero merges were possible (a vocabulary
     # of single-symbol words): same shape the oracle's all-empty
     # best{i} union produces
-    merges = local_frame(
-        vocab.sparkSession,
-        rows, "rk int, pair string, pair_count bigint")
+    merges = local_frame(vocab.sparkSession, rows,
+                         "rk int, pair string, pair_count bigint")
     return merges, sym
 
 
