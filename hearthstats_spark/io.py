@@ -200,7 +200,6 @@ def _split_copy(sf_dir: str, name: str, files: int) -> str:
     """Path of ``name``'s copy: a ``<name>.parquet`` directory of
     ``files`` equal files of one row group each, written with pyarrow
     and committed once per source fingerprint."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, f"{name}.parquet")
@@ -212,25 +211,13 @@ def _split_copy(sf_dir: str, name: str, files: int) -> str:
         os.makedirs(out)
         with pq.ParquetFile(src) as pf:
             rows = -(-pf.metadata.num_rows // files)  # ceil
-            held: list[pa.RecordBatch] = []
-            n_held = part = 0
-
-            def flush(table: pa.Table) -> None:
-                nonlocal part
-                pq.write_table(table, os.path.join(
-                    out, f"part-{part:05d}.parquet"), row_group_size=rows)
-                part += 1
-
-            for batch in pf.iter_batches(batch_size=rows):
-                held.append(batch)
-                n_held += batch.num_rows
-                if n_held >= rows:
-                    table = pa.Table.from_batches(held, pf.schema_arrow)
-                    flush(table.slice(0, rows))
-                    held = table.slice(rows).to_batches()
-                    n_held -= rows
-            if n_held:
-                flush(pa.Table.from_batches(held, pf.schema_arrow))
+            # every batch but the last holds ``rows`` rows, read
+            # across the source's row-group boundaries
+            for i, batch in enumerate(pf.iter_batches(batch_size=rows)):
+                with pq.ParquetWriter(
+                        os.path.join(out, f"part-{i:05d}.parquet"),
+                        pf.schema_arrow) as part:
+                    part.write_batch(batch, row_group_size=rows)
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
     ann_index.commit_artifact(art, write)
