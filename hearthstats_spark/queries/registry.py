@@ -15,6 +15,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hearthstats_spark import scratch
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -35,7 +37,11 @@ def register(name: str, oracle: str | None = None):
     (``session.ensure_conf``: UTC, nanosAsLong, Arrow) and leaves the
     caller's tuning alone: the driver invokes queries on a session IT
     built, and e.g. a non-UTC session timezone would shift every
-    date_format/window boundary away from the DuckDB oracle's."""
+    date_format/window boundary away from the DuckDB oracle's.
+
+    It then runs the op inside its own ``scratch.workspace``: the op's
+    scratch directories and memory-sink views are removed when it
+    returns, so the returned frame must read none of them."""
     import functools
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -47,7 +53,8 @@ def register(name: str, oracle: str | None = None):
             from hearthstats_spark.session import ensure_conf
 
             ensure_conf(spark)
-            return fn(spark, sf_dir)
+            with scratch.workspace(spark, name):
+                return fn(spark, sf_dir)
 
         REGISTRY[name] = Query(name, wrapped, oracle)
         return fn

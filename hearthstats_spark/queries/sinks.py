@@ -1,4 +1,5 @@
-"""Group A sinks — side-effect round-trips (SURVEY.md §2 s01-s02).
+"""Side-effect sinks and storage round-trips (SURVEY.md §2: s01, s02,
+s08, s09, s10, s12, s15, s18, s20, s21).
 
 s01 mirrors the reference's canonical sink: its whole purpose is
 building a SQLite database file (SURVEY.md §1.1 [R] — scrape →
@@ -8,20 +9,23 @@ SURVEY.md §7 step 10 applies: collect via Arrow → ``sqlite3`` stdlib
 write. The JDBC path is attempted first and the row records which
 path ran, so the substitution is visible to the judge.
 
-Both are rows-only checks (side effects have no DuckDB oracle).
+Every op writes under its call's ``scratch.path`` directories, which
+the registry removes when the op returns; so each returns a summary
+row built from values it already computed (``io.local_frame``), or,
+for s15, a ``localCheckpoint``-ed frame. All are rows-only checks
+(side effects have no DuckDB oracle).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import sqlite3
-import tempfile
 from contextlib import closing
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hearthstats_spark import scratch
 from hearthstats_spark.io import load_table, local_frame
 from hearthstats_spark.queries.registry import register
 
@@ -34,29 +38,24 @@ def s01_jdbc_sqlite_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hearthstats_spark.queries.joins import q14_join_cross
 
     result = q14_join_cross(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="hs_sqlite_")
-    db = os.path.join(base, "hearthstats.db")
+    db = os.path.join(scratch.path("sqlite"), "hearthstats.db")
     sink = "jdbc"
     try:
-        try:
-            (result.write.format("jdbc").option("url", f"jdbc:sqlite:{db}")
-             .option("dbtable", "region_nation").mode("overwrite").save())
-        except Exception:
-            # no sqlite-jdbc jar offline (SURVEY §7.10)
-            sink = "sqlite3_fallback"
-            pdf = result.toPandas()
-            n_written = len(pdf)  # the rows it wrote, no second q14 run
-            with closing(sqlite3.connect(db)) as con:  # to_sql commits
-                pdf.to_sql("region_nation", con, index=False,
-                           if_exists="replace")
-        else:
-            n_written = result.count()
-        with closing(sqlite3.connect(db)) as con:
-            n_back = con.execute(
-                "SELECT COUNT(*) FROM region_nation").fetchone()[0]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    # the summary row is a local relation: it reads nothing under base
+        (result.write.format("jdbc").option("url", f"jdbc:sqlite:{db}")
+         .option("dbtable", "region_nation").mode("overwrite").save())
+    except Exception:
+        # no sqlite-jdbc jar offline (SURVEY §7.10)
+        sink = "sqlite3_fallback"
+        pdf = result.toPandas()
+        n_written = len(pdf)  # the rows it wrote, no second q14 run
+        with closing(sqlite3.connect(db)) as con:  # to_sql commits
+            pdf.to_sql("region_nation", con, index=False,
+                       if_exists="replace")
+    else:
+        n_written = result.count()
+    with closing(sqlite3.connect(db)) as con:
+        n_back = con.execute(
+            "SELECT COUNT(*) FROM region_nation").fetchone()[0]
     return local_frame(
         spark,
         [(sink, n_written, n_back)],
@@ -71,33 +70,30 @@ def s02_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     header/schema, verify value equality, report per-format rows +
     match flags."""
     nation = load_table(spark, sf_dir, "nation")
-    base = tempfile.mkdtemp(prefix="hs_roundtrip_")
+    base = scratch.path("roundtrip")
     csv_dir, json_dir = os.path.join(base, "csv"), os.path.join(base, "json")
-    try:
-        nation.write.mode("overwrite").option("header", True).csv(csv_dir)
-        nation.write.mode("overwrite").json(json_dir)
+    nation.write.mode("overwrite").option("header", True).csv(csv_dir)
+    nation.write.mode("overwrite").json(json_dir)
 
-        csv_back = (spark.read.option("header", True)
-                    .schema(nation.schema).csv(csv_dir))
-        json_back = spark.read.schema(nation.schema).json(json_dir)
+    csv_back = (spark.read.option("header", True)
+                .schema(nation.schema).csv(csv_dir))
+    json_back = spark.read.schema(nation.schema).json(json_dir)
 
-        def matches(back: DataFrame) -> bool:
-            return (
-                back.count() == nation.count()
-                and back.exceptAll(nation).count() == 0
-                and nation.exceptAll(back).count() == 0
-            )
-
-        return local_frame(
-            spark,
-            [
-                ("csv", csv_back.count(), bool(matches(csv_back))),
-                ("json", json_back.count(), bool(matches(json_back))),
-            ],
-            "fmt string, n_rows long, roundtrip_ok boolean",
+    def matches(back: DataFrame) -> bool:
+        return (
+            back.count() == nation.count()
+            and back.exceptAll(nation).count() == 0
+            and nation.exceptAll(back).count() == 0
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+
+    return local_frame(
+        spark,
+        [
+            ("csv", csv_back.count(), bool(matches(csv_back))),
+            ("json", json_back.count(), bool(matches(json_back))),
+        ],
+        "fmt string, n_rows long, roundtrip_ok boolean",
+    )
 
 
 @register("s08_orc_avro_roundtrip", oracle=None)  # rows-only: side-effect op
@@ -109,34 +105,31 @@ def s08_orc_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     'avro_unavailable' — the attempt keeps the gap visible rather
     than silently untested). Reports per-format rows + match flag."""
     nation = load_table(spark, sf_dir, "nation")
-    base = tempfile.mkdtemp(prefix="hs_orc_")
+    base = scratch.path("orc")
     orc_dir = os.path.join(base, "orc")
+    nation.write.mode("overwrite").orc(orc_dir)
+    orc_back = spark.read.schema(nation.schema).orc(orc_dir)
+    orc_ok = (
+        orc_back.count() == nation.count()
+        and orc_back.exceptAll(nation).count() == 0
+        and nation.exceptAll(orc_back).count() == 0
+    )
+
+    avro_state = "avro_ok"
     try:
-        nation.write.mode("overwrite").orc(orc_dir)
-        orc_back = spark.read.schema(nation.schema).orc(orc_dir)
-        orc_ok = (
-            orc_back.count() == nation.count()
-            and orc_back.exceptAll(nation).count() == 0
-            and nation.exceptAll(orc_back).count() == 0
-        )
+        avro_dir = os.path.join(base, "avro")
+        nation.write.mode("overwrite").format("avro").save(avro_dir)
+        a_back = spark.read.format("avro").load(avro_dir)
+        if a_back.count() != nation.count():
+            avro_state = "avro_mismatch"
+    except Exception:
+        avro_state = "avro_unavailable"  # external spark-avro jar absent
 
-        avro_state = "avro_ok"
-        try:
-            avro_dir = os.path.join(base, "avro")
-            nation.write.mode("overwrite").format("avro").save(avro_dir)
-            a_back = spark.read.format("avro").load(avro_dir)
-            if a_back.count() != nation.count():
-                avro_state = "avro_mismatch"
-        except Exception:
-            avro_state = "avro_unavailable"  # external spark-avro jar absent
-
-        return local_frame(
-            spark,
-            [("orc", nation.count(), bool(orc_ok), avro_state)],
-            "fmt string, n_rows long, roundtrip_ok boolean, avro string",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return local_frame(
+        spark,
+        [("orc", nation.count(), bool(orc_ok), avro_state)],
+        "fmt string, n_rows long, roundtrip_ok boolean, avro string",
+    )
 
 
 @register("s10_partitioned_layout", oracle=None)  # rows-only: side-effect op
@@ -160,8 +153,7 @@ def s10_partitioned_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-    base = tempfile.mkdtemp(prefix="hs_part_")
-    tdir = os.path.join(base, "orders_by_status")
+    tdir = os.path.join(scratch.path("part"), "orders_by_status")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(tdir)
 
     # explicit schema: an EMPTY load writes a directory with no data
@@ -219,7 +211,7 @@ def s09_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_inserted_after) — self-verifying counts."""
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_acctbal")
-    base = tempfile.mkdtemp(prefix="hs_merge_")
+    base = scratch.path("merge")
     target_dir = os.path.join(base, "target")
     c.write.mode("overwrite").parquet(target_dir)
 
@@ -289,7 +281,7 @@ def s12_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns one self-verifying summary row."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    base = tempfile.mkdtemp(prefix="hs_compact_")
+    base = scratch.path("compact")
     frag = os.path.join(base, "fragmented")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
 
@@ -340,11 +332,10 @@ def s15_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver cost — at real scale you pin the evolved schema in a
     catalog/metastore instead of re-merging footers per query, and
     this op demonstrates why: the schema comes from the FILES here).
-    Returns a 1-row summary the test asserts on."""
-    import tempfile
-
+    Returns a 1-row summary the test asserts on, localCheckpointed so
+    it outlives the directory."""
     nation = load_table(spark, sf_dir, "nation")
-    base = tempfile.mkdtemp(prefix="hs_s15_")
+    base = scratch.path("evolve")
     v1 = nation.select("n_nationkey", "n_name", "n_regionkey")
     v1.write.mode("overwrite").parquet(f"{base}/v=1")
     v2 = nation.select(
@@ -362,7 +353,7 @@ def s15_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_old_schema_rows"),
         F.sum(F.when(F.col("n_comment_len").isNotNull(), 1).otherwise(0))
         .alias("n_new_schema_rows"),
-    )
+    ).localCheckpoint()
 
 
 @register("s18_zone_map_skipping", oracle=None)  # rows-only: side-effect op
@@ -394,8 +385,7 @@ def s18_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     reading 16 TB and 200 GB for a month-range query."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-    base = tempfile.mkdtemp(prefix="hs_s18_")
-    data_dir = os.path.join(base, "data")
+    data_dir = os.path.join(scratch.path("zonemap"), "data")
     o.repartitionByRange(16, "o_orderdate").write.parquet(data_dir)
 
     df = spark.read.parquet(data_dir)
@@ -421,24 +411,19 @@ def s18_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = df.filter(pred)
     only_pruned = pruned.exceptAll(full)
     only_full = full.exceptAll(pruned)
-    try:
-        counters = (
-            local_frame(
-                spark,
-                [(int(n_files), len(kept))],
-                "n_files_total long, n_files_kept long")
-            .crossJoin(pruned.agg(F.count(F.lit(1)).alias("n_rows_pruned")))
-            .crossJoin(full.agg(F.count(F.lit(1)).alias("n_rows_full")))
-            .crossJoin(only_pruned.agg(
-                F.count(F.lit(1)).alias("n_only_pruned")))
-            .crossJoin(only_full.agg(F.count(F.lit(1)).alias("n_only_full")))
-        )
-        # materialize before cleanup: the returned frame must not
-        # depend on the about-to-be-deleted temp layout
-        rows = counters.collect()
-        return local_frame(spark, rows, counters.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    counters = (
+        local_frame(
+            spark,
+            [(int(n_files), len(kept))],
+            "n_files_total long, n_files_kept long")
+        .crossJoin(pruned.agg(F.count(F.lit(1)).alias("n_rows_pruned")))
+        .crossJoin(full.agg(F.count(F.lit(1)).alias("n_rows_full")))
+        .crossJoin(only_pruned.agg(
+            F.count(F.lit(1)).alias("n_only_pruned")))
+        .crossJoin(only_full.agg(F.count(F.lit(1)).alias("n_only_full")))
+    )
+    # materialize: the returned frame must not read the scratch layout
+    return local_frame(spark, counters.collect(), counters.schema)
 
 
 @register("s20_csv_corrupt_records", oracle=None)  # rows-only: side-effect op
@@ -460,8 +445,7 @@ def s20_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     dead-letter sink instead of counted."""
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey")
-    base = tempfile.mkdtemp(prefix="hs_s20_")
-    csv_dir = os.path.join(base, "csv")
+    csv_dir = os.path.join(scratch.path("csv"), "csv")
     n.coalesce(1).write.option("header", "false").csv(csv_dir)
     # inject malformed lines among the valid ones
     bad_lines = [
@@ -522,14 +506,14 @@ def s20_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         # unpersist ONLY this query's two cached frames — a session-
         # wide clearCache() would evict every caller-held cache when
         # s20 composes with a bench sweep or cache-reusing query
-        # (ADVICE r4); blocking=False, the files vanish with base
+        # (ADVICE r4); blocking=False, the files vanish with the
+        # workspace
         for frame in (permissive, dropped):
             if frame is not None:
                 try:
                     frame.unpersist()
                 except Exception:
                     pass
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register("s21_binary_file_source", oracle=None)  # rows-only: side-effect op
@@ -554,7 +538,7 @@ def s21_binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     d = load_table(spark, sf_dir, "documents")
-    base = tempfile.mkdtemp(prefix="hs_s21_")
+    base = scratch.path("blobs")
     blobs = (d.filter(F.col("text").isNotNull())
              .groupBy("source")
              .agg(F.concat_ws("\n", F.array_sort(F.collect_list("text")))
@@ -570,22 +554,19 @@ def s21_binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(os.path.join(base, "decoy.skipme"), "wb") as fh:
         fh.write(b"must never be listed")
 
-    try:
-        bf = (spark.read.format("binaryFile")
-              .option("pathGlobFilter", "*.bin").load(base)
-              .select("path", "length",
-                      F.md5("content").alias("digest")))
-        got = {r["path"]: (r["length"], r["digest"])
-               for r in bf.collect()}  # n_files rows (metadata-sized)
-        n_ok = sum(1 for k, v in truth.items() if got.get(k) == v)
-        return local_frame(
-            spark,
-            [(len(truth), len(got), n_ok,
-              bool(not any(k.endswith(".skipme") for k in got)),
-              bool(got == truth))],
-            "n_files_written long, n_files_listed long, "
-            "n_files_verified long, glob_pruned boolean, "
-            "all_match boolean",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    bf = (spark.read.format("binaryFile")
+          .option("pathGlobFilter", "*.bin").load(base)
+          .select("path", "length",
+                  F.md5("content").alias("digest")))
+    got = {r["path"]: (r["length"], r["digest"])
+           for r in bf.collect()}  # n_files rows (metadata-sized)
+    n_ok = sum(1 for k, v in truth.items() if got.get(k) == v)
+    return local_frame(
+        spark,
+        [(len(truth), len(got), n_ok,
+          bool(not any(k.endswith(".skipme") for k in got)),
+          bool(got == truth))],
+        "n_files_written long, n_files_listed long, "
+        "n_files_verified long, glob_pruned boolean, "
+        "all_match boolean",
+    )

@@ -1,14 +1,23 @@
-"""Structured Streaming pipeline (SURVEY.md §2 s03-s04, §3.2 entry
-point C).
+"""Structured Streaming pipeline (SURVEY.md §2 s03-s07, s11, s13,
+s14, s16, s17, s19, s22-s27; §3.2 entry point C).
 
 The batch twins (q41-q43) are oracle-checked; DuckDB has no streaming
-semantics, so these two run the REAL streaming runtime —
+semantics, so the streaming ops run the REAL streaming runtime —
 ``readStream`` file source → event-time windows + watermark →
 micro-batch sinks — and are graded rows-only. Late/out-of-order
 delivery correctness is asserted in tests/test_streaming.py by
 replaying events across micro-batches (FIXTURES.md §streaming).
 
 Design:
+- Every directory an op writes (replay links, sink output,
+  checkpoints) is a ``scratch.path`` of the call's workspace, and
+  every memory-sink query is named by ``scratch.table``; the registry
+  removes both when the op returns. So an op returns a local
+  relation, a memory-sink frame (which keeps its rows once its view
+  is dropped), or a ``localCheckpoint`` of what it read back.
+- ``_drain`` runs a stream to completion under ``Trigger.AvailableNow``
+  with a fresh workspace checkpoint (s14 passes the one its two
+  phases share).
 - The source directory is file-per-micro-batch partitioned by
   ``event_id % 5`` so event time arrives out of order across batches
   (a real replay, not a single sorted file). Each layout is written
@@ -41,12 +50,13 @@ import errno
 import json
 import os
 import shutil
-import tempfile
 from datetime import timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from hearthstats_spark import scratch
 from hearthstats_spark.io import load_table, local_frame
 from hearthstats_spark.operators import ann_index
 from hearthstats_spark.queries.registry import register
@@ -68,16 +78,17 @@ def write_replay_source(spark: SparkSession, sf_dir: str,
 
     Each layout is written once per events fingerprint into the
     artifact store (``ann_index.commit_artifact``); every call gets a
-    fresh directory of hard links ``part_{i}_{r}_{n}.parquet`` to the
-    committed files, so a second call submits no Spark job. The caller
-    owns its directory and may rename, add or unlink entries (s14
+    fresh workspace directory (``scratch.path``) of hard links
+    ``part_{i}_{r}_{n}.parquet`` to the committed files, so a second
+    call submits no Spark job, and the workspace's removal unlinks
+    only the links. The caller may rename, add or unlink entries (s14
     moves files out and back, s13 links in a late file) but must never
     write to or ``os.utime`` a served file: it shares its inode with
     the committed one, so the change would reach every later call, and
     the file source delivers files in mtime order, which is the
     build's write order. Across filesystems (``EXDEV``) the files are
     copied with their mtimes. With ``SPARK_GRAFT_ANN_CACHE=0`` the
-    same build writes into the per-call directory instead."""
+    same build writes into a workspace directory instead."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -100,9 +111,9 @@ def write_replay_source(spark: SparkSession, sf_dir: str,
         base = ann_index.artifact_path(sf_dir, f"replay_{layout}",
                                        table="events")
         ann_index.commit_artifact(base, build)
-        flat = tempfile.mkdtemp(prefix="hs_stream_src_")
+        flat = scratch.path("stream_src")
     else:
-        base = tempfile.mkdtemp(prefix="hs_stream_src_")
+        base = scratch.path("stream_src")
         build(base)
         flat = os.path.join(base, "flat")
         os.makedirs(flat)
@@ -132,9 +143,6 @@ def _link_or_copy(src: str, dst: str) -> None:
         shutil.copy2(src, dst)
 
 
-_MEM_SINK_SEQ = [0]  # memory-sink table names must be session-unique
-
-
 def _full_progress(q, spark: SparkSession) -> list:
     """``q.recentProgress`` with a LOUD truncation guard.
 
@@ -159,9 +167,37 @@ def _full_progress(q, spark: SparkSession) -> list:
     return progress
 
 
-def _mem_table_name(prefix: str) -> str:
-    _MEM_SINK_SEQ[0] += 1
-    return f"{prefix}_{os.getpid()}_{_MEM_SINK_SEQ[0]}"
+def _drain(writer: DataStreamWriter,
+           checkpoint: str | None = None) -> StreamingQuery:
+    """Run ``writer`` under ``Trigger.AvailableNow`` until its source
+    is drained, checkpointing into a fresh workspace directory unless
+    ``checkpoint`` names one; return the terminated query."""
+    q = (writer.trigger(availableNow=True)
+         .option("checkpointLocation", checkpoint or scratch.path("ckpt"))
+         .start())
+    q.awaitTermination()
+    return q
+
+
+def _append_batches(out: str):
+    """foreachBatch sink: append each micro-batch to parquet under
+    ``out``, tagged with its ``batch_id`` (the idempotent upsert key a
+    real kv-store write would use); nothing collects to the driver."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        (batch_df.withColumn("batch_id", F.lit(batch_id))
+         .write.mode("append").parquet(out))
+
+    return sink
+
+
+def _last_batch(spark: SparkSession, out: str, *keys: str) -> DataFrame:
+    """The rows ``_append_batches`` wrote to ``out`` in the last batch
+    that emitted each key: an update-mode stream's final state."""
+    w = Window.partitionBy(*keys).orderBy(F.col("batch_id").desc())
+    return (spark.read.parquet(out)
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1))
 
 
 def _hourly_agg_stream(spark: SparkSession, src: str, schema):
@@ -192,16 +228,10 @@ def s03_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns the final state; equality with the batch q41 answer is
     asserted in tests/test_streaming.py."""
     src, ev = write_replay_source(spark, sf_dir)
-    name = _mem_table_name("s03_state")
-    q = (
-        _hourly_agg_stream(spark, src, ev.schema)
-        .writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    name = scratch.table("s03_state")
+    _drain(_hourly_agg_stream(spark, src, ev.schema)
+           .writeStream.outputMode("complete")
+           .format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -240,16 +270,10 @@ def s06_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # append-mode parquet FILE sink — the join output streams straight
     # to storage, distributed, nothing on the driver
-    out = tempfile.mkdtemp(prefix="hs_s06_out_")
-    q = (
-        joined.select("p_id", "v_id")
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    out = scratch.path("out")
+    _drain(joined.select("p_id", "v_id")
+           .writeStream.outputMode("append")
+           .format("parquet").option("path", out))
     n_stream_pairs = spark.read.parquet(out).distinct().count()
 
     ev_b = ev
@@ -286,7 +310,8 @@ def s05_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch groupBy answer (asserted in tests/test_streaming.py).
     State is one (long, double) pair per user — bounded, and evicted
     in production by a timeout (`GroupStateTimeout` — not set here
-    since AvailableNow drains a finite source)."""
+    since AvailableNow drains a finite source). The result is
+    localCheckpointed: it outlives the sink directory."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -317,34 +342,17 @@ def s05_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # distributed foreachBatch sink: each micro-batch's state
-    # emissions land in parquet tagged with batch_id (the idempotent
-    # upsert key a real kv-store write would use); nothing collects
-    # to the driver
-    out = tempfile.mkdtemp(prefix="hs_s05_out_")
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out))
-
-    q = (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    # emissions land in parquet tagged with batch_id
+    out = scratch.path("out")
+    _drain(stream.writeStream.outputMode("update")
+           .foreachBatch(_append_batches(out)))
 
     # final state = each user's LAST emission (max batch_id)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
     return (
-        spark.read.parquet(out)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        _last_batch(spark, out, "user_id")
         .select("user_id", "n_events",
                 F.round("total_value", 4).alias("total_value"))
+        .localCheckpoint()
     )
 
 
@@ -363,16 +371,10 @@ def s04_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # deduped stream appends straight to a parquet file sink
-    out = tempfile.mkdtemp(prefix="hs_s04_out_")
-    q = (
-        stream.select("event_id")
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    out = scratch.path("out")
+    _drain(stream.select("event_id")
+           .writeStream.outputMode("append")
+           .format("parquet").option("path", out))
     n_after = spark.read.parquet(out).distinct().count()
 
     return local_frame(
@@ -393,13 +395,13 @@ def s07_stream_processing_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer (tests/test_streaming.py mirrors s03's equivalence
     assertion)."""
     src, ev = write_replay_source(spark, sf_dir)
-    name = _mem_table_name("s07_state")
+    name = scratch.table("s07_state")
     q = (
         _hourly_agg_stream(spark, src, ev.schema)
         .writeStream.outputMode("complete")
         .format("memory").queryName(name)
         .trigger(processingTime="500 milliseconds")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
+        .option("checkpointLocation", scratch.path("ckpt"))
         .start()
     )
     # ProcessingTime runs forever by design; the source is static
@@ -433,7 +435,7 @@ def s11_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, ev = write_replay_source(spark, sf_dir)
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey")
-    name = _mem_table_name("s11_state")
+    name = scratch.table("s11_state")
     stream = (
         spark.readStream.schema(ev.schema).parquet(src)
         .filter(F.col("event_type") == "purchase")
@@ -448,14 +450,8 @@ def s11_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("revenue"),
         )
     )
-    q = (
-        stream.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.outputMode("complete")
+           .format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -484,7 +480,8 @@ def s13_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     not raw events (the 200 late events arrive as their ~174
     distinct hour×type partials). The op therefore also reports the
     expected count at that same granularity
-    (``late_partial_groups``)."""
+    (``late_partial_groups``). The result is localCheckpointed: it
+    outlives the sink directory."""
     import time
 
     src, ev = write_replay_source(spark, sf_dir, time_ordered=True)
@@ -493,7 +490,7 @@ def s13_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         late.select(F.window("ts", "1 hour"), "event_type")
         .distinct().count()
     )
-    late_dir = tempfile.mkdtemp(prefix="hs_late_")
+    late_dir = scratch.path("late")
     late.coalesce(1).write.mode("overwrite").parquet(late_dir)
     newest = max(os.path.getmtime(os.path.join(src, f))
                  for f in os.listdir(src))
@@ -505,7 +502,7 @@ def s13_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the LAST micro-batch, after every watermark advance
             os.utime(dst, (time.time() + 10, newest + 10))
 
-    out = tempfile.mkdtemp(prefix="hs_s13_out_")
+    out = scratch.path("out")
     agg = (
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")  # one file = one batch
@@ -523,39 +520,20 @@ def s13_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out))
-
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    q = _drain(agg.writeStream.outputMode("update")
+               .foreachBatch(_append_batches(out)))
     dropped = sum(
         int(p["stateOperators"][0]["numRowsDroppedByWatermark"])
         for p in _full_progress(q, spark) if p.get("stateOperators")
     )
 
-    upd = spark.read.parquet(out)
-    from pyspark.sql import Window as W
-    last = (
-        upd.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("hour_start", "event_type")
-                .orderBy(F.col("batch_id").desc())),
-        )
-        .filter(F.col("rn") == 1)
-        .select("hour_start", "event_type", "n", "total_value")
-    )
     return (
-        last.withColumn("late_input_rows", F.lit(200))
+        _last_batch(spark, out, "hour_start", "event_type")
+        .select("hour_start", "event_type", "n", "total_value")
+        .withColumn("late_input_rows", F.lit(200))
         .withColumn("late_partial_groups", F.lit(late_groups))
         .withColumn("late_dropped", F.lit(dropped))
+        .localCheckpoint()
     )
 
 
@@ -572,32 +550,27 @@ def s14_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the final batch the dir IS the recovered answer.
 
     The returned frame is the final state plus phase-2 input-row
-    accounting; tests assert phase2 rows == rows of the two late
-    files and final state == the batch answer over ALL files."""
+    accounting, localCheckpointed so it outlives the sink directory;
+    tests assert phase2 rows == rows of the two late files and final
+    state == the batch answer over ALL files."""
     src, ev = write_replay_source(spark, sf_dir, time_ordered=True)
     staged = sorted(
         f for f in os.listdir(src) if f.endswith(".parquet"))
     hold_back = staged[3:]  # phase 2 delivers these
-    pen = tempfile.mkdtemp(prefix="hs_s14_pen_")
+    pen = scratch.path("pen")
     for f in hold_back:
         os.rename(os.path.join(src, f), os.path.join(pen, f))
 
-    ckpt = tempfile.mkdtemp(prefix="hs_ckpt_")
-    out = tempfile.mkdtemp(prefix="hs_s14_out_")
+    ckpt = scratch.path("ckpt")  # shared by both phases
+    out = scratch.path("out")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out)
 
     def run_phase() -> int:
-        q = (
-            _hourly_agg_stream(spark, src, ev.schema)
-            .writeStream.outputMode("complete")
-            .foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
+        q = _drain(_hourly_agg_stream(spark, src, ev.schema)
+                   .writeStream.outputMode("complete")
+                   .foreachBatch(sink), ckpt)
         return sum(int(p["numInputRows"])
                    for p in _full_progress(q, spark))
 
@@ -609,6 +582,7 @@ def s14_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.read.parquet(out)
         .withColumn("phase2_input_rows", F.lit(phase2_rows))
+        .localCheckpoint()
     )
 
 
@@ -633,8 +607,8 @@ def s16_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful streaming op; also asserted in tests/test_streaming.py).
     """
     src, ev = write_replay_source(spark, sf_dir, time_ordered=True)
-    name = _mem_table_name("s16_state")
-    q = (
+    name = scratch.table("s16_state")
+    _drain(
         spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
@@ -646,11 +620,7 @@ def s16_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("w.end").alias("e"), "n_events")
         .writeStream.outputMode("complete")
         .format("memory").queryName(name)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
     )
-    q.awaitTermination()
     stream = spark.table(name)
     batch = (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"),
@@ -707,7 +677,7 @@ def s17_stream_foreachbatch_merge(spark: SparkSession,
     cost at 100 TB and exactly what transactional formats fix;
     everything else is linear and driver-free."""
     src, ev = write_replay_source(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="hs_s17_")
+    base = scratch.path("versions")
     marker_path = os.path.join(base, "_latest")
     state = {"n_batches": 0}
 
@@ -766,37 +736,28 @@ def s17_stream_foreachbatch_merge(spark: SparkSession,
         os.replace(tmp, marker_path)
         state["n_batches"] += 1
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _drain(spark.readStream.schema(ev.schema)
+           .option("maxFilesPerTrigger", "1")
+           .parquet(src)
+           .writeStream.foreachBatch(merge_batch))
 
     final = spark.read.parquet(read_marker()["dir"])
     batch_ans = delta_of(ev)
     cols = ["user_id", "n_events", "sum_value", "last"]
     only_stream = final.select(cols).exceptAll(batch_ans.select(cols))
     only_batch = batch_ans.select(cols).exceptAll(final.select(cols))
-    try:
-        counters = (
-            final.agg(F.count(F.lit(1)).alias("n_users_merged"))
-            .crossJoin(local_frame(
-                spark,
-                [(state["n_batches"],)], "n_batches long"))
-            .crossJoin(only_stream.agg(
-                F.count(F.lit(1)).alias("n_only_stream")))
-            .crossJoin(only_batch.agg(
-                F.count(F.lit(1)).alias("n_only_batch")))
-        )
-        rows = counters.collect()  # materialize before temp cleanup
-        return local_frame(spark, rows, counters.schema)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    counters = (
+        final.agg(F.count(F.lit(1)).alias("n_users_merged"))
+        .crossJoin(local_frame(
+            spark,
+            [(state["n_batches"],)], "n_batches long"))
+        .crossJoin(only_stream.agg(
+            F.count(F.lit(1)).alias("n_only_stream")))
+        .crossJoin(only_batch.agg(
+            F.count(F.lit(1)).alias("n_only_batch")))
+    )
+    rows = counters.collect()  # materialize before temp cleanup
+    return local_frame(spark, rows, counters.schema)
 
 
 @register("s19_stream_stream_left_outer", oracle=None)  # rows-only
@@ -847,7 +808,7 @@ def s19_stream_stream_left_outer(spark: SparkSession,
         from datetime import datetime as _dt
         max_ts = _dt(1992, 1, 1)
     for k in (1, 2):
-        sentinel_dir = tempfile.mkdtemp(prefix="hs_s19_sentinel_")
+        sentinel_dir = scratch.path("sentinel")
         sent_ts = max_ts + timedelta(hours=100 * k)
         (local_frame(
             spark,
@@ -880,16 +841,10 @@ def s19_stream_stream_left_outer(spark: SparkSession,
                "v_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"),
         "left_outer",
     )
-    out = tempfile.mkdtemp(prefix="hs_s19_out_")
-    q = (
-        joined.select("p_id", "v_id")
-        .writeStream.outputMode("append")
-        .format("parquet").option("path", out)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    out = scratch.path("out")
+    _drain(joined.select("p_id", "v_id")
+           .writeStream.outputMode("append")
+           .format("parquet").option("path", out))
     got = (spark.read.parquet(out).distinct()
            .filter(F.col("p_id") >= 0))  # drop the sentinel emissions
     n_stream_matched = got.filter(F.col("v_id").isNotNull()).count()
@@ -1137,7 +1092,8 @@ def s22_stream_transform_with_state(spark: SparkSession,
 
     Timers aren't asserted on either lane: under an AvailableNow
     drain, processing-time expiry is nondeterministic relative to the
-    final batch; ``timeMode='None'`` keeps batch-equivalence exact."""
+    final batch; ``timeMode='None'`` keeps batch-equivalence exact.
+    The result is localCheckpointed: it outlives the sink directory."""
     import importlib.util
 
     src, ev = write_replay_source(spark, sf_dir)
@@ -1145,7 +1101,7 @@ def s22_stream_transform_with_state(spark: SparkSession,
         have_proto = importlib.util.find_spec("google.protobuf") is not None
     except ModuleNotFoundError:
         have_proto = False
-    out = tempfile.mkdtemp(prefix="hs_s22_out_")
+    out = scratch.path("out")
 
     if have_proto:
         lane = "transformWithState"
@@ -1167,7 +1123,8 @@ def s22_stream_transform_with_state(spark: SparkSession,
                     timeMode="None",
                 )
             )
-            _s22_drain(stream, out)
+            _drain(stream.writeStream.outputMode("update")
+                   .foreachBatch(_append_batches(out)))
         finally:
             if before is None:
                 spark.conf.unset(prov_key)
@@ -1199,39 +1156,18 @@ def s22_stream_transform_with_state(spark: SparkSession,
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
         )
-        _s22_drain(stream, out)
+        _drain(stream.writeStream.outputMode("update")
+               .foreachBatch(_append_batches(out)))
 
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("batch_id").desc())
     return (
-        spark.read.parquet(out)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        _last_batch(spark, out, "user_id")
         .select("user_id", "n_events",
                 F.round("total_value", 4).alias("total_value"),
                 "n_types", "n_batches",
                 F.round("list_total", 4).alias("list_total"),
                 F.lit(lane).alias("lane"))
+        .localCheckpoint()
     )
-
-
-def _s22_drain(stream: DataFrame, out: str) -> None:
-    """AvailableNow-drain ``stream`` through the batch_id-tagging
-    foreachBatch parquet sink both s22 lanes share."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out))
-
-    q = (
-        stream.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="hs_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
 
 
 def run_streaming_dedup(spark: SparkSession, sf_dir: str,
@@ -1285,6 +1221,23 @@ def s23_stream_incremental_dedup(spark: SparkSession,
     exact superset identity is asserted doc-by-doc in
     tests/test_streaming.py)."""
     return _streaming_dedup_impl(spark, sf_dir, None)
+
+
+def _replay_chunks(chunks: list[DataFrame]) -> str:
+    """Write each frame of ``chunks`` as one parquet file and link the
+    files, in order, into one workspace directory: read with
+    ``maxFilesPerTrigger=1``, it delivers chunk i as micro-batch i."""
+    src = scratch.path("src")
+    n = 0
+    for i, chunk in enumerate(chunks):
+        cdir = scratch.path(f"chunk_{i}")
+        chunk.coalesce(1).write.mode("overwrite").parquet(cdir)
+        for f in sorted(os.listdir(cdir)):
+            if f.endswith(".parquet"):
+                os.link(os.path.join(cdir, f),
+                        os.path.join(src, f"b{i}_{n}.parquet"))
+                n += 1
+    return src
 
 
 def _sig_schema() -> str:
@@ -1423,73 +1376,52 @@ def _streaming_dedup_impl(spark: SparkSession, sf_dir: str,
     corpus_docs = d.filter(
         d.text.isNotNull() & (d.doc_id % _BATCH_MOD != 0))
 
-    base = tempfile.mkdtemp(prefix="hs_s23_")
-    idx_base = os.path.join(base, "sig_index")
-    src_dir = os.path.join(base, "src")
-    os.makedirs(src_dir, exist_ok=True)
-    try:
-        # 1. materialize the persisted index's corpus layer (one-time
-        # at test scale; the standing table of the design point)
-        _corpus_sig_frame(spark, sf_dir, corpus_docs).write.mode(
-            "overwrite").parquet(os.path.join(idx_base, "corpus"))
-        n_index0 = spark.read.parquet(
-            os.path.join(idx_base, "corpus")).count()
+    idx_base = scratch.path("sig_index")
+    # 1. materialize the persisted index's corpus layer (one-time
+    # at test scale; the standing table of the design point)
+    _corpus_sig_frame(spark, sf_dir, corpus_docs).write.mode(
+        "overwrite").parquet(os.path.join(idx_base, "corpus"))
+    n_index0 = spark.read.parquet(
+        os.path.join(idx_base, "corpus")).count()
 
-        # 2. the crawl replay: 5 files, one micro-batch each
-        for i in range(5):
-            (batch_docs
-             .filter(F.pmod(F.col("doc_id") / _BATCH_MOD, F.lit(5)) == i)
-             .select("doc_id", "text")
-             .coalesce(1).write.mode("overwrite")
-             .parquet(os.path.join(base, f"chunk_{i}")))
-        n_files = 0
-        for i in range(5):
-            cdir = os.path.join(base, f"chunk_{i}")
-            for f in sorted(os.listdir(cdir)):
-                if f.endswith(".parquet"):
-                    os.link(os.path.join(cdir, f),
-                            os.path.join(src_dir, f"b{i}_{n_files}.parquet"))
-                    n_files += 1
+    # 2. the crawl replay: 5 files, one micro-batch each
+    src_dir = _replay_chunks(
+        [batch_docs
+         .filter(F.pmod(F.col("doc_id") / _BATCH_MOD, F.lit(5)) == i)
+         .select("doc_id", "text") for i in range(5)])
 
-        counters = {"batches": 0, "seen": 0, "kept": 0, "dropped": 0}
+    counters = {"batches": 0, "seen": 0, "kept": 0, "dropped": 0}
 
-        def screen_batch(batch_df: DataFrame, batch_id: int) -> None:
-            n_seen, n_drop = screen_and_commit(
-                spark, batch_df, batch_id, idx_base, results_dir)
-            counters["batches"] += 1
-            counters["seen"] += n_seen
-            counters["dropped"] += n_drop
-            counters["kept"] += n_seen - n_drop
+    def screen_batch(batch_df: DataFrame, batch_id: int) -> None:
+        n_seen, n_drop = screen_and_commit(
+            spark, batch_df, batch_id, idx_base, results_dir)
+        counters["batches"] += 1
+        counters["seen"] += n_seen
+        counters["dropped"] += n_drop
+        counters["kept"] += n_seen - n_drop
 
-        stream = (spark.readStream
-                  .schema("doc_id long, text string")
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(src_dir))
-        q = (stream.writeStream.outputMode("append")
-             .foreachBatch(screen_batch)
-             .trigger(availableNow=True)
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="hs_ckpt_"))
-             .start())
-        q.awaitTermination()
+    _drain(spark.readStream
+           .schema("doc_id long, text string")
+           .option("maxFilesPerTrigger", 1)
+           .parquet(src_dir)
+           .writeStream.outputMode("append")
+           .foreachBatch(screen_batch))
 
-        n_index1 = spark.read.schema(_sig_schema()).parquet(
-            *_index_paths(idx_base, counters["batches"])).count()
-        n_batch_docs = batch_docs.count()
-        return local_frame(
-            spark,
-            [(counters["batches"], counters["seen"], counters["kept"],
-              counters["dropped"], n_index0, n_index1,
-              bool(counters["seen"] == n_batch_docs
-                   and counters["kept"] + counters["dropped"]
-                   == counters["seen"]
-                   and n_index1 == n_index0 + counters["kept"]))],
-            "n_batches long, n_seen long, n_kept long, n_dropped long, "
-            "index_rows_before long, index_rows_after long, "
-            "consistent boolean",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    n_index1 = spark.read.schema(_sig_schema()).parquet(
+        *_index_paths(idx_base, counters["batches"])).count()
+    n_batch_docs = batch_docs.count()
+    return local_frame(
+        spark,
+        [(counters["batches"], counters["seen"], counters["kept"],
+          counters["dropped"], n_index0, n_index1,
+          bool(counters["seen"] == n_batch_docs
+               and counters["kept"] + counters["dropped"]
+               == counters["seen"]
+               and n_index1 == n_index0 + counters["kept"]))],
+        "n_batches long, n_seen long, n_kept long, n_dropped long, "
+        "index_rows_before long, index_rows_after long, "
+        "consistent boolean",
+    )
 
 
 @register("s24_stream_ann_serving", oracle=None)  # rows-only
@@ -1532,25 +1464,12 @@ def s24_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     enc = persisted(spark, sf_dir, "pq_codes",
                     lambda: encode_against(sub, cb))
 
-    base = tempfile.mkdtemp(prefix="hs_s24_")
-    src_dir = os.path.join(base, "src")
-    out_dir = os.path.join(base, "results")
-    os.makedirs(src_dir, exist_ok=True)
+    out_dir = scratch.path("results")
     try:
         # query replay: 5 files -> 5 micro-batches
         queries = e.filter(F.col("vec_id") < _N_STREAM_Q)
-        for i in range(5):
-            (queries.filter(F.col("vec_id") % 5 == i)
-             .coalesce(1).write.mode("overwrite")
-             .parquet(os.path.join(base, f"chunk_{i}")))
-        n = 0
-        for i in range(5):
-            cdir = os.path.join(base, f"chunk_{i}")
-            for f in sorted(os.listdir(cdir)):
-                if f.endswith(".parquet"):
-                    os.link(os.path.join(cdir, f),
-                            os.path.join(src_dir, f"b{i}_{n}.parquet"))
-                    n += 1
+        src_dir = _replay_chunks(
+            [queries.filter(F.col("vec_id") % 5 == i) for i in range(5)])
 
         def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
             (adc_topk(subvectors_of(batch_df), enc, cb,
@@ -1558,17 +1477,12 @@ def s24_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
              .write.mode("overwrite")
              .parquet(os.path.join(out_dir, f"batch_{batch_id}")))
 
-        stream = (spark.readStream
-                  .schema(queries.schema)
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(src_dir))
-        q = (stream.writeStream.outputMode("append")
-             .foreachBatch(serve_batch)
-             .trigger(availableNow=True)
-             .option("checkpointLocation",
-                     tempfile.mkdtemp(prefix="hs_ckpt_"))
-             .start())
-        q.awaitTermination()
+        _drain(spark.readStream
+               .schema(queries.schema)
+               .option("maxFilesPerTrigger", 1)
+               .parquet(src_dir)
+               .writeStream.outputMode("append")
+               .foreachBatch(serve_batch))
 
         streamed = spark.read.parquet(os.path.join(out_dir, "batch_*"))
         batch_ans = adc_topk(subvectors_of(queries), enc, cb,
@@ -1593,7 +1507,6 @@ def s24_stream_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         cb.unpersist()
-        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---- s25: signature-index compaction — s23's maintenance lane -----
@@ -1661,65 +1574,62 @@ def s25_stream_index_compaction(spark: SparkSession,
                 .filter(F.pmod(F.col("doc_id") / _BATCH_MOD, F.lit(5)) == i)
                 .select("doc_id", "text"))
 
-    base = tempfile.mkdtemp(prefix="hs_s25_")
+    base = scratch.path("compaction")
     idx_base = os.path.join(base, "layered")
     dest_base = os.path.join(base, "compacted")
     res_a = os.path.join(base, "res_layered")
     res_b = os.path.join(base, "res_compacted")
-    try:
-        # layered index: corpus + 4 committed batch layers
-        _corpus_sig_frame(spark, sf_dir, corpus_docs).write.mode(
-            "overwrite").parquet(os.path.join(idx_base, "corpus"))
-        for i in range(4):
-            screen_and_commit(spark, slice_of(i), i, idx_base, None)
-        n_layers = len(_index_paths(idx_base, 4))
-        rows_layered = spark.read.schema(_sig_schema()).parquet(
-            *_index_paths(idx_base, 4)).count()
+    # layered index: corpus + 4 committed batch layers
+    _corpus_sig_frame(spark, sf_dir, corpus_docs).write.mode(
+        "overwrite").parquet(os.path.join(idx_base, "corpus"))
+    for i in range(4):
+        screen_and_commit(spark, slice_of(i), i, idx_base, None)
+    n_layers = len(_index_paths(idx_base, 4))
+    rows_layered = spark.read.schema(_sig_schema()).parquet(
+        *_index_paths(idx_base, 4)).count()
 
-        # compact, snapshot, re-compact (crash-replay of the job);
-        # localCheckpoint: the snapshot must not lazily re-read the
-        # directory the second compaction overwrites
-        rows_out1 = compact_index(spark, idx_base, 4, dest_base)
-        snap = spark.read.parquet(
-            os.path.join(dest_base, "corpus")).localCheckpoint()
-        rows_out2 = compact_index(spark, idx_base, 4, dest_base)
-        fresh = spark.read.parquet(os.path.join(dest_base, "corpus"))
-        idempotent = bool(
-            rows_out1 == rows_out2
-            and fresh.exceptAll(snap).count() == 0
-            and snap.exceptAll(fresh).count() == 0)
+    # compact, snapshot, re-compact (crash-replay of the job);
+    # localCheckpoint: the snapshot must not lazily re-read the
+    # directory the second compaction overwrites
+    rows_out1 = compact_index(spark, idx_base, 4, dest_base)
+    snap = spark.read.parquet(
+        os.path.join(dest_base, "corpus")).localCheckpoint()
+    rows_out2 = compact_index(spark, idx_base, 4, dest_base)
+    fresh = spark.read.parquet(os.path.join(dest_base, "corpus"))
+    idempotent = bool(
+        rows_out1 == rows_out2
+        and fresh.exceptAll(snap).count() == 0
+        and snap.exceptAll(fresh).count() == 0)
 
-        # held-out batch: identical decisions on both index layouts
-        a = screen_and_commit(spark, slice_of(4), 4, idx_base, res_a)
-        b = screen_and_commit(spark, slice_of(4), 0, dest_base, res_b)
-        da = spark.read.parquet(os.path.join(res_a, "batch_4"))
-        db = spark.read.parquet(os.path.join(res_b, "batch_0"))
-        joined = (
-            da.select("doc_id", F.col("n_match_best").alias("na"),
-                      F.col("kept").alias("ka"))
-            .join(db.select("doc_id",
-                            F.col("n_match_best").alias("nb"),
-                            F.col("kept").alias("kb")),
-                  "doc_id", "full")
-        )
-        n_mismatch = joined.filter(
-            F.col("na").isNull() | F.col("nb").isNull()
-            | (F.col("na") != F.col("nb"))
-            | (F.col("ka") != F.col("kb"))).count()
+    # held-out batch: identical decisions on both index layouts
+    a = screen_and_commit(spark, slice_of(4), 4, idx_base, res_a)
+    b = screen_and_commit(spark, slice_of(4), 0, dest_base, res_b)
+    da = spark.read.parquet(os.path.join(res_a, "batch_4"))
+    db = spark.read.parquet(os.path.join(res_b, "batch_0"))
+    joined = (
+        da.select("doc_id", F.col("n_match_best").alias("na"),
+                  F.col("kept").alias("ka"))
+        .join(db.select("doc_id",
+                        F.col("n_match_best").alias("nb"),
+                        F.col("kept").alias("kb")),
+              "doc_id", "full")
+    )
+    n_mismatch = joined.filter(
+        F.col("na").isNull() | F.col("nb").isNull()
+        | (F.col("na") != F.col("nb"))
+        | (F.col("ka") != F.col("kb"))).count()
 
-        return local_frame(
-            spark,
-            [(n_layers, rows_layered, rows_out1, a[0], a[1], n_mismatch,
-              idempotent,
-              bool(rows_layered == rows_out1 and idempotent
-                   and n_mismatch == 0 and a == b and a[0] > 0))],
-            "n_layers long, rows_layered long, rows_compacted long, "
-            "n_next_docs long, n_next_dropped long, "
-            "n_decision_mismatch long, idempotent boolean, "
-            "consistent boolean",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return local_frame(
+        spark,
+        [(n_layers, rows_layered, rows_out1, a[0], a[1], n_mismatch,
+          idempotent,
+          bool(rows_layered == rows_out1 and idempotent
+               and n_mismatch == 0 and a == b and a[0] > 0))],
+        "n_layers long, rows_layered long, rows_compacted long, "
+        "n_next_docs long, n_next_dropped long, "
+        "n_decision_mismatch long, idempotent boolean, "
+        "consistent boolean",
+    )
 
 
 # ---- s26: retention-windowed screen — signatures expire ----------
@@ -1812,77 +1722,74 @@ def s26_stream_index_retention(spark: SparkSession,
                 .filter(F.pmod(F.col("doc_id") / _BATCH_MOD, F.lit(5)) == i)
                 .select("doc_id", "text"))
 
-    base = tempfile.mkdtemp(prefix="hs_s26_")
-    try:
-        lanes = {}
-        for lane, retention in (("full", None), ("ttl", _W)):
-            idx = os.path.join(base, f"idx_{lane}")
-            res = os.path.join(base, f"res_{lane}")
-            _corpus_sig_frame(spark, sf_dir, corpus_docs).write.mode(
-                "overwrite").parquet(os.path.join(idx, "corpus"))
-            for i in range(5):
-                screen_and_commit(spark, slice_of(i), i, idx, res,
-                                  retention=retention)
-            lanes[lane] = spark.read.parquet(
-                *[os.path.join(res, f"batch_{i}") for i in range(5)])
+    base = scratch.path("retention")
+    lanes = {}
+    for lane, retention in (("full", None), ("ttl", _W)):
+        idx = os.path.join(base, f"idx_{lane}")
+        res = os.path.join(base, f"res_{lane}")
+        _corpus_sig_frame(spark, sf_dir, corpus_docs).write.mode(
+            "overwrite").parquet(os.path.join(idx, "corpus"))
+        for i in range(5):
+            screen_and_commit(spark, slice_of(i), i, idx, res,
+                              retention=retention)
+        lanes[lane] = spark.read.parquet(
+            *[os.path.join(res, f"batch_{i}") for i in range(5)])
 
-        # third lane: window-of-full — re-screen every slice against
-        # the retention-window subset of the FULL lane's committed
-        # layers (no commits, so subset-of-same-layers is guaranteed)
-        idx_full = os.path.join(base, "idx_full")
-        wof = screen_decisions(spark, slice_of(0), 0, idx_full,
-                               retention=_W)
-        for i in range(1, 5):
-            wof = wof.unionByName(screen_decisions(
-                spark, slice_of(i), i, idx_full, retention=_W))
+    # third lane: window-of-full — re-screen every slice against
+    # the retention-window subset of the FULL lane's committed
+    # layers (no commits, so subset-of-same-layers is guaranteed)
+    idx_full = os.path.join(base, "idx_full")
+    wof = screen_decisions(spark, slice_of(0), 0, idx_full,
+                           retention=_W)
+    for i in range(1, 5):
+        wof = wof.unionByName(screen_decisions(
+            spark, slice_of(i), i, idx_full, retention=_W))
 
-        joined = (
-            lanes["full"].select("doc_id", "batch_id",
-                                 F.col("n_match_best").alias("nm_full"),
-                                 F.col("kept").alias("kept_full"))
-            .join(lanes["ttl"].select(
-                "doc_id", F.col("n_match_best").alias("nm_ttl"),
-                F.col("kept").alias("kept_ttl")), "doc_id")
-            .join(wof.select(
-                "doc_id", F.col("n_match_best").alias("nm_wof"),
-                F.col("kept").alias("kept_wof")), "doc_id")
-            .localCheckpoint()
-        )
-        n_docs = joined.count()
-        # 1. monotonicity (structural): the windowed view of full's
-        #    layers never matches MORE, never drops a doc full kept
-        n_mono_viol = joined.filter(
-            (F.col("nm_wof") > F.col("nm_full"))
-            | ((F.col("kept_full") == 1) & (F.col("kept_wof") == 0))
-        ).count()
-        # 2. expiry rescues: dropped under full, kept in the window
-        n_rescued = joined.filter(
-            (F.col("kept_full") == 0) & (F.col("kept_wof") == 1)).count()
-        # 3. early batches identical while nothing has expired
-        #    (real ttl pipeline vs real full pipeline)
-        n_early_mismatch = joined.filter(
-            (F.col("batch_id") < _W)
-            & ((F.col("nm_full") != F.col("nm_ttl"))
-               | (F.col("kept_full") != F.col("kept_ttl")))).count()
-        # 4. informational: where the self-committing ttl pipeline
-        #    diverges from the window-of-full screen (legitimate —
-        #    match chains through rescued survivors)
-        n_ttl_div = joined.filter(
-            (F.col("nm_ttl") != F.col("nm_wof"))
-            | (F.col("kept_ttl") != F.col("kept_wof"))).count()
+    joined = (
+        lanes["full"].select("doc_id", "batch_id",
+                             F.col("n_match_best").alias("nm_full"),
+                             F.col("kept").alias("kept_full"))
+        .join(lanes["ttl"].select(
+            "doc_id", F.col("n_match_best").alias("nm_ttl"),
+            F.col("kept").alias("kept_ttl")), "doc_id")
+        .join(wof.select(
+            "doc_id", F.col("n_match_best").alias("nm_wof"),
+            F.col("kept").alias("kept_wof")), "doc_id")
+        .localCheckpoint()
+    )
+    n_docs = joined.count()
+    # 1. monotonicity (structural): the windowed view of full's
+    #    layers never matches MORE, never drops a doc full kept
+    n_mono_viol = joined.filter(
+        (F.col("nm_wof") > F.col("nm_full"))
+        | ((F.col("kept_full") == 1) & (F.col("kept_wof") == 0))
+    ).count()
+    # 2. expiry rescues: dropped under full, kept in the window
+    n_rescued = joined.filter(
+        (F.col("kept_full") == 0) & (F.col("kept_wof") == 1)).count()
+    # 3. early batches identical while nothing has expired
+    #    (real ttl pipeline vs real full pipeline)
+    n_early_mismatch = joined.filter(
+        (F.col("batch_id") < _W)
+        & ((F.col("nm_full") != F.col("nm_ttl"))
+           | (F.col("kept_full") != F.col("kept_ttl")))).count()
+    # 4. informational: where the self-committing ttl pipeline
+    #    diverges from the window-of-full screen (legitimate —
+    #    match chains through rescued survivors)
+    n_ttl_div = joined.filter(
+        (F.col("nm_ttl") != F.col("nm_wof"))
+        | (F.col("kept_ttl") != F.col("kept_wof"))).count()
 
-        return local_frame(
-            spark,
-            [(_W, n_docs, n_mono_viol, n_rescued, n_early_mismatch,
-              n_ttl_div,
-              bool(n_docs > 0 and n_mono_viol == 0 and n_rescued > 0
-                   and n_early_mismatch == 0))],
-            "retention long, n_docs long, n_monotonicity_violations "
-            "long, n_rescued_by_expiry long, n_early_mismatch long, "
-            "n_ttl_wof_divergence long, consistent boolean",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return local_frame(
+        spark,
+        [(_W, n_docs, n_mono_viol, n_rescued, n_early_mismatch,
+          n_ttl_div,
+          bool(n_docs > 0 and n_mono_viol == 0 and n_rescued > 0
+               and n_early_mismatch == 0))],
+        "retention long, n_docs long, n_monotonicity_violations "
+        "long, n_rescued_by_expiry long, n_early_mismatch long, "
+        "n_ttl_wof_divergence long, consistent boolean",
+    )
 
 
 # ---- s27: streaming vocabulary maintenance (tokenizer stats) ------
@@ -1922,7 +1829,7 @@ def s27_stream_vocab_maintenance(spark: SparkSession,
     docs = (load_table(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull())
             .select("doc_id", "text"))
-    base = tempfile.mkdtemp(prefix="hs_s27_")
+    base = scratch.path("vocab")
     src = os.path.join(base, "src")
     store = os.path.join(base, "store")
     n_slices = 3
@@ -1937,58 +1844,48 @@ def s27_stream_vocab_maintenance(spark: SparkSession,
          .write.mode("overwrite")
          .parquet(os.path.join(store, f"layer_{batch_id}")))
 
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1").parquet(src)
-            .select(F.explode(F.split("text", r"\s+")).alias("word"))
-            .filter(F.length("word") >= 2)
-            .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-            .writeStream.outputMode("update")
-            .foreachBatch(commit_layer)
-            .trigger(availableNow=True)
-            .option("checkpointLocation",
-                    tempfile.mkdtemp(prefix="hs_ckpt_"))
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark.readStream.schema(docs.schema)
+           .option("maxFilesPerTrigger", "1").parquet(src)
+           .select(F.explode(F.split("text", r"\s+")).alias("word"))
+           .filter(F.length("word") >= 2)
+           .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
+           .writeStream.outputMode("update")
+           .foreachBatch(commit_layer))
 
-        layers = spark.read.parquet(
-            *[os.path.join(store, f"layer_{i}")
-              for i in range(seen["batches"])]).localCheckpoint()
-        vocab_stream = layers.groupBy("word").agg(
-            F.max_by("freq", "batch_id").alias("freq"))
-        vocab_batch = word_freqs(
-            load_table(spark, sf_dir, "documents")).localCheckpoint()
-        n_mismatch = (vocab_stream.exceptAll(vocab_batch).count()
-                      + vocab_batch.exceptAll(vocab_stream).count())
-        mono = (
-            layers.alias("a")
-            .join(layers.alias("b"),
-                  (F.col("a.word") == F.col("b.word"))
-                  & (F.col("a.batch_id") < F.col("b.batch_id")))
-            .filter(F.col("a.freq") > F.col("b.freq"))
-        )
-        n_mono_viol = mono.count()
+    layers = spark.read.parquet(
+        *[os.path.join(store, f"layer_{i}")
+          for i in range(seen["batches"])]).localCheckpoint()
+    vocab_stream = layers.groupBy("word").agg(
+        F.max_by("freq", "batch_id").alias("freq"))
+    vocab_batch = word_freqs(
+        load_table(spark, sf_dir, "documents")).localCheckpoint()
+    n_mismatch = (vocab_stream.exceptAll(vocab_batch).count()
+                  + vocab_batch.exceptAll(vocab_stream).count())
+    mono = (
+        layers.alias("a")
+        .join(layers.alias("b"),
+              (F.col("a.word") == F.col("b.word"))
+              & (F.col("a.batch_id") < F.col("b.batch_id")))
+        .filter(F.col("a.freq") > F.col("b.freq"))
+    )
+    n_mono_viol = mono.count()
 
-        def head_of(vocab: DataFrame):
-            return pair_counts(vocab).agg(
-                F.min_by("pair", F.struct(
-                    (-F.col("pair_count")).alias("n"),
-                    F.col("pair"))).alias("bp")).collect()[0]["bp"]
+    def head_of(vocab: DataFrame):
+        return pair_counts(vocab).agg(
+            F.min_by("pair", F.struct(
+                (-F.col("pair_count")).alias("n"),
+                F.col("pair"))).alias("bp")).collect()[0]["bp"]
 
-        head_match = head_of(vocab_stream) == head_of(vocab_batch)
-        n_words = vocab_stream.count()
-        return local_frame(
-            spark,
-            [(seen["batches"], n_words, n_mismatch, n_mono_viol,
-              bool(head_match),
-              bool(seen["batches"] == n_slices and n_words > 0
-                   and n_mismatch == 0 and n_mono_viol == 0
-                   and head_match))],
-            "n_batches long, n_words long, n_vocab_mismatch long, "
-            "n_monotonicity_violations long, head_match boolean, "
-            "consistent boolean",
-        )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    head_match = head_of(vocab_stream) == head_of(vocab_batch)
+    n_words = vocab_stream.count()
+    return local_frame(
+        spark,
+        [(seen["batches"], n_words, n_mismatch, n_mono_viol,
+          bool(head_match),
+          bool(seen["batches"] == n_slices and n_words > 0
+               and n_mismatch == 0 and n_mono_viol == 0
+               and head_match))],
+        "n_batches long, n_words long, n_vocab_mismatch long, "
+        "n_monotonicity_violations long, head_match boolean, "
+        "consistent boolean",
+    )

@@ -8,7 +8,6 @@ scale, so their plan shapes are pinned here.
 from __future__ import annotations
 
 import re
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,8 +23,8 @@ from tests.conftest import SF_SMALL
 
 
 @pytest.fixture(scope="module")
-def partitioned_orders(spark):
-    tmp = tempfile.mkdtemp(prefix="hs_layout_")
+def partitioned_orders(spark, tmp_path_factory):
+    tmp = str(tmp_path_factory.mktemp("layout"))
     orders = load_table(spark, SF_SMALL, "orders")
     write_time_partitioned(orders, tmp, "o_orderdate", "month")
     return tmp, orders

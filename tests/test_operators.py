@@ -263,7 +263,7 @@ def test_prefix_jaccard_known_pairs(spark):
 
 
 def test_prefix_jaccard_indexed_lane_equal(spark, registry,
-                                           monkeypatch):
+                                           monkeypatch, tmp_path):
     """The persisted-index tier (SPARK_GRAFT_JACCARD_INDEX=1) must be
     bit-identical to the in-plan kernel — q83's env-gated lane, the
     round-9 crossover measurement's correctness precondition. Runs
@@ -271,8 +271,6 @@ def test_prefix_jaccard_indexed_lane_equal(spark, registry,
     _jaccard_pairs is what's tested, with the artifact cache ON for
     the indexed lane (that's the lane being shipped) in an isolated
     cache root."""
-    import tempfile
-
     from hearthstats_spark.oracle import compare
 
     sf = "/root/testdata/sf0.001"
@@ -280,8 +278,7 @@ def test_prefix_jaccard_indexed_lane_equal(spark, registry,
     monkeypatch.delenv("SPARK_GRAFT_JACCARD_INDEX", raising=False)
     base = q83.fn(spark, sf).toPandas()
     monkeypatch.setenv("SPARK_GRAFT_JACCARD_INDEX", "1")
-    monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE_DIR",
-                       tempfile.mkdtemp(prefix="hs_jidx_"))
+    monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE_DIR", str(tmp_path / "jidx"))
     indexed = q83.fn(spark, sf).toPandas()
     res = compare("jaccard_lanes", base, indexed)
     assert res.ok, str(res)

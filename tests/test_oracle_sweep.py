@@ -51,17 +51,31 @@ def test_rows_only_op_returns_rows(spark, name):
     assert res.n_spark >= 1, str(res)
 
 
-def test_one_shot_sinks_leave_no_scratch(spark, tmp_path, monkeypatch):
-    """Each one-shot sink returns a local relation that reads none of
-    its scratch files, so it removes its temp directory before it
-    returns: two runs in one session leave no ``hs_*`` directory and
-    give the same rows."""
-    import tempfile
+SIDE_EFFECT_OPS = [n for n in _REG if n.startswith("s")]
 
+
+@pytest.mark.parametrize("name", SIDE_EFFECT_OPS)
+def test_one_shot_sinks_leave_no_scratch(spark, tmp_path, monkeypatch,
+                                         name):
+    """Every side-effect and streaming op runs in a registry workspace
+    that removes its scratch directories and memory-sink views when
+    the op returns: two runs in one session give the same rows, leave
+    no ``hs_*`` entry in the temp dir and no new catalog table."""
+    import tempfile
+    from collections import Counter
+
+    from hearthstats_spark.operators import ann_index
+
+    # keep serving artifacts from the usual store while the temp dir
+    # points at tmp_path
+    if ann_index.cache_enabled():
+        monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE_DIR",
+                           ann_index._cache_root())
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    for name in UNTESTED_ROWS_ONLY:
-        runs = [sorted(_REG[name].fn(spark, SF_SMALL).collect())
-                for _ in range(2)]
-        assert runs[0] == runs[1], name
-        assert runs[0], name
-        assert not [p.name for p in tmp_path.glob("hs_*")], name
+    tables = {t.name for t in spark.catalog.listTables()}
+    runs = [Counter(_REG[name].fn(spark, SF_SMALL).collect())
+            for _ in range(2)]
+    assert runs[0] == runs[1]
+    assert runs[0]
+    assert not [p.name for p in tmp_path.glob("hs_*")]
+    assert {t.name for t in spark.catalog.listTables()} == tables

@@ -13,6 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from hearthstats_spark import scratch
 from tests.conftest import SF_SMALL, jobs_of
 
 
@@ -214,11 +215,12 @@ def test_second_replay_source_call_runs_no_spark_job(
             spark, SF_SMALL, time_ordered=time_ordered)[0])
 
     first, again = [], []
-    assert jobs_of(spark, lambda: call(first)), "cold call should build"
-    assert jobs_of(spark, lambda: call(again)) == []
-    assert first[0] != again[0]  # a directory of its own per call
-    assert _served(again[0]) == _served(first[0])
-    assert len(_served(again[0])) == 5
+    with scratch.workspace(spark, "test_replay"):
+        assert jobs_of(spark, lambda: call(first)), "cold call should build"
+        assert jobs_of(spark, lambda: call(again)) == []
+        assert first[0] != again[0]  # a directory of its own per call
+        assert _served(again[0]) == _served(first[0])
+        assert len(_served(again[0])) == 5
 
 
 def test_ops_never_touch_committed_replay_files(spark, registry,
@@ -230,8 +232,9 @@ def test_ops_never_touch_committed_replay_files(spark, registry,
     from hearthstats_spark.operators.ann_index import source_fingerprint
     from hearthstats_spark.streaming.pipeline import write_replay_source
 
-    for time_ordered in (False, True):
-        write_replay_source(spark, SF_SMALL, time_ordered=time_ordered)
+    with scratch.workspace(spark, "test_replay"):
+        for time_ordered in (False, True):
+            write_replay_source(spark, SF_SMALL, time_ordered=time_ordered)
     before = source_fingerprint(replay_store)
     assert before.count(".parquet:") == 10  # both layouts committed
     registry["s13_watermark_late_drop"].fn(spark, SF_SMALL).collect()
@@ -252,16 +255,17 @@ def test_replay_lanes_serve_the_same_files(spark, replay_store,
     from hearthstats_spark.streaming.pipeline import write_replay_source
 
     layouts = ({}, {"time_ordered": True}, {"duplicate": True})
-    linked = [_served(write_replay_source(spark, SF_SMALL, **kw)[0])
-              for kw in layouts]
-    if lane == "cache_off":
-        monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE", "0")
-    else:
-        def no_link(src, dst):
-            raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), src)
-        monkeypatch.setattr(os, "link", no_link)
-    other = [_served(write_replay_source(spark, SF_SMALL, **kw)[0])
-             for kw in layouts]
+    with scratch.workspace(spark, "test_replay"):
+        linked = [_served(write_replay_source(spark, SF_SMALL, **kw)[0])
+                  for kw in layouts]
+        if lane == "cache_off":
+            monkeypatch.setenv("SPARK_GRAFT_ANN_CACHE", "0")
+        else:
+            def no_link(src, dst):
+                raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), src)
+            monkeypatch.setattr(os, "link", no_link)
+        other = [_served(write_replay_source(spark, SF_SMALL, **kw)[0])
+                 for kw in layouts]
     assert other == linked
     assert [len(files) for files in linked] == [5, 5, 10]
 
@@ -328,7 +332,8 @@ def test_s23_incremental_dedup_superset_of_frozen_screen(
     from hearthstats_spark.streaming.pipeline import run_streaming_dedup
 
     results = str(tmp_path / "s23_results")
-    summary = run_streaming_dedup(spark, SF_SMALL, results).collect()[0]
+    with scratch.workspace(spark, "test_s23"):
+        summary = run_streaming_dedup(spark, SF_SMALL, results).collect()[0]
     assert summary["consistent"], summary
     assert summary["n_batches"] == 5
 
